@@ -20,6 +20,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# Full per-query detail of the last run, relative to the repo root.
+# Listed in .gitignore: a bench run must not dirty the tree.
+BENCH_DETAIL = ".bench/bench_detail.json"
+
 BENCH_QUERIES = [
     # headline analytics
     "q1_pricing_summary",
@@ -178,8 +182,7 @@ BENCH_QUERIES = [
 # comparison sees the full common set — then (b) the rest of
 # BENCH_QUERIES in registry order as space permits. Append new names at
 # the END; never reorder or remove (reordering rotates the common set
-# again). The full 3-decimal detail always lands in
-# tools/bench_detail.json.
+# again). The full 3-decimal detail always lands in BENCH_DETAIL.
 INLINE_PRIORITY = [
     "ann_batch_indexed", "ann_lsh_topk", "asof_join_events_orders",
     "corpus_packed_sequences", "corpus_split_leakage_safe", "corpus_token_budget",
@@ -388,18 +391,17 @@ def main():
         line = json.dumps(out)
     if len(line) > 1900:
         # 3. the registry outgrew the capture window (57 queries no
-        # longer fit inline): persist the FULL per-query detail as a
-        # repo artifact, keep a STABLE-BY-NAME selection inline (see
-        # INLINE_PRIORITY — most-expensive-first rotated the driver's
-        # round-over-round common set, VERDICT r11 #2), round inline
-        # values to 2dp to fit more entries, and say how many were cut
-        # — never silently truncate coverage evidence.
+        # longer fit inline): persist the FULL per-query detail as an
+        # untracked run artifact, keep a STABLE-BY-NAME selection inline
+        # (see INLINE_PRIORITY — most-expensive-first rotated the
+        # driver's round-over-round common set, VERDICT r11 #2), round
+        # inline values to 2dp to fit more entries, and say how many
+        # were cut — never silently truncate coverage evidence.
         detail = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "tools",
-            "bench_detail.json",
+            os.path.dirname(os.path.abspath(__file__)), BENCH_DETAIL
         )
         try:
+            os.makedirs(os.path.dirname(detail), exist_ok=True)
             with open(detail, "w") as f:
                 json.dump(
                     {
@@ -412,7 +414,7 @@ def main():
                     indent=1,
                     sort_keys=True,
                 )
-            out["bench_detail_artifact"] = "tools/bench_detail.json"
+            out["bench_detail_artifact"] = BENCH_DETAIL
         except OSError as e:  # read-only checkout: keep the line going
             print(f"bench detail not persisted: {e}", file=sys.stderr)
         ordered = sorted(

@@ -64,11 +64,13 @@ def main():
         T.lang_id(F.col("text")).alias("lang"),
         T.token_count(F.col("text")).alias("n_tokens"),
     )
+    # Every later stage and its count reads this frame: persist it so the
+    # scoring projection runs once, not once per count.
     kept = scored.where(
         (F.col("quality") >= 0.3)
         & (F.col("repetition") <= 0.98)
         & (F.col("n_tokens") >= 8)
-    )
+    ).persist()
     n1 = kept.count()
 
     # 3) exact dedup (content hash; survivor = min doc_id).
@@ -154,6 +156,7 @@ def main():
     for r in split.groupBy("split").count().orderBy("split").collect():
         print(f"  {r['split']}: {r['count']}")
     split.orderBy("doc_id").show(5, truncate=False)
+    kept.unpersist()
 
 
 if __name__ == "__main__":

@@ -19,3 +19,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def query_df(spark, sf_dir):
+    """``query_df(name)``: the DataFrame the registry query ``name``
+    builds, built on first use and kept for the session. Plan-health
+    explains it, ``test_query_runs`` collects it and the scalar-only
+    gate reads its schema, so a query's build runs once for all three
+    (``test_query_runs`` still builds a fresh second copy to check that
+    a rebuild gives the same rows)."""
+    from thundercats_spark.queries import all_queries
+
+    queries = all_queries()
+    built = {}
+
+    def build(name):
+        if name not in built:
+            built[name] = queries[name].spark_fn(spark, sf_dir)
+        return built[name]
+
+    return build

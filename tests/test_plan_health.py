@@ -51,11 +51,6 @@ def _explain(spark, df):
     return df._jdf.queryExecution().explainString(mode)
 
 
-def _plan(spark, name, sf_dir):
-    q = all_queries()[name]
-    return _explain(spark, q.spark_fn(spark, sf_dir))
-
-
 def _inert_overrides(spark, sf_dir):
     """Final plans for the prep-heavy queries, built the way a real
     pipeline builds them: the driver-action prep (quantile boundaries,
@@ -104,14 +99,10 @@ def _inert_overrides(spark, sf_dir):
 
 
 @pytest.fixture(scope="module")
-def plans(spark, sf_dir):
+def plans(spark, sf_dir, query_df):
     overrides = _inert_overrides(spark, sf_dir)
     return {
-        name: (
-            _explain(spark, overrides[name])
-            if name in overrides
-            else _plan(spark, name, sf_dir)
-        )
+        name: _explain(spark, overrides[name] if name in overrides else query_df(name))
         for name in all_queries()
         if name not in SKIP
     }

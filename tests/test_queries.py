@@ -11,13 +11,12 @@ QUERIES = all_queries()
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_runs(spark, sf_dir, name):
-    q = QUERIES[name]
-    df = q.spark_fn(spark, sf_dir)
+def test_query_runs(spark, sf_dir, name, query_df):
+    df = query_df(name)
     rows = df.limit(5).collect()
     assert df.columns, name
     # deterministic: same plan, same result on re-run
-    again = q.spark_fn(spark, sf_dir).limit(5).collect()
+    again = QUERIES[name].spark_fn(spark, sf_dir).limit(5).collect()
     assert [tuple(r) for r in rows] == [tuple(r) for r in again]
 
 
@@ -31,7 +30,7 @@ def test_entry_contract(spark):
     assert len(qs) >= 30
 
 
-def test_oracle_query_output_is_scalar_only(spark, sf_dir):
+def test_oracle_query_output_is_scalar_only(query_df):
     """The driver canonicalizes results via pandas sort_values, which
     cannot hash list/dict cells — an array/map/struct output column
     makes an oracle-checked query driver-red even when its values are
@@ -44,7 +43,7 @@ def test_oracle_query_output_is_scalar_only(spark, sf_dir):
     for name, q in sorted(QUERIES.items()):
         if not q.oracle:
             continue
-        df = q.spark_fn(spark, sf_dir)
+        df = query_df(name)
         nested = [
             f.name
             for f in df.schema.fields

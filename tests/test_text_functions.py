@@ -1,8 +1,38 @@
 """Text-analysis column functions (pure JVM expressions)."""
 
+import math
+import re
+from collections import Counter
+
 import pyspark.sql.functions as F
+import pytest
 
 from thundercats_spark.functions import text_analysis as T
+from thundercats_spark.operators import dedup
+
+# Edge cases for the n-gram builders: empty, whitespace-only, null,
+# fewer than / exactly / more than n tokens, tabs and newlines (Spark's
+# trim strips spaces only, so a leading tab yields an empty token),
+# repeats and non-ASCII.
+NGRAM_TEXTS = [
+    "", "   ", None, "a", "a b", "a b c", "  x y z  ", "a b c d e",
+    "a b a b a b", "a\tb\nc  d", "\ta b\n", "über straße café über straße",
+    "日本 語 の テキスト 日本 語",
+]
+
+
+def _ref_tokens(text):
+    """Plain-Python ``tokens``: trim spaces, split on Java's ``\\s+``."""
+    if text is None:
+        return None
+    s = text.strip(" ")
+    return re.split(r"[ \t\n\x0b\f\r]+", s) if s else []
+
+
+def _ref_windows(toks, n):
+    if toks is None:
+        return None
+    return [toks[i : i + n] for i in range(len(toks) - n + 1)]
 
 
 def _one(spark, text, col):
@@ -70,6 +100,94 @@ def test_pii_counts_and_scrub(spark):
     assert "example.com" not in clean and "555" not in clean
     # clean text is a fixpoint: scrubbing again changes nothing
     assert _one(spark, clean, T.pii_scrub(F.col("t"))) == clean
+
+
+def test_ngram_builders_match_python_reference(spark):
+    df = spark.createDataFrame(list(enumerate(NGRAM_TEXTS)), "id int, t string")
+    t = F.col("t")
+    for n in (2, 3):
+        rows = df.select(
+            "id",
+            T.word_ngrams(t, n).alias("grams"),
+            dedup.word_shingles(t, n).alias("shingles"),
+            T.duplicate_ngram_fraction(t, n).alias("dup"),
+        ).collect()
+        for r in rows:
+            toks = _ref_tokens(NGRAM_TEXTS[r["id"]])
+            wins = _ref_windows(toks, n)
+            grams = None if wins is None else [" ".join(w) for w in wins]
+            assert r["grams"] == grams, (n, r)
+            if toks is None:
+                assert r["shingles"] is None and r["dup"] is None, (n, r)
+                continue
+            shingles = list(dict.fromkeys(grams)) if grams else [" ".join(toks)]
+            assert r["shingles"] == shingles, (n, r)
+            dup = (len(grams) - len(set(grams))) / len(grams) if grams else 0.0
+            assert r["dup"] == dup, (n, r)
+
+    # hashes: the same windows, hashed directly (no sliding in Spark)
+    n = 3
+    ref = [
+        (i, _ref_windows(_ref_tokens(text), n))
+        for i, text in enumerate(NGRAM_TEXTS)
+    ]
+    want = {
+        r["id"]: r["h"]
+        for r in spark.createDataFrame(ref, "id int, w array<array<string>>")
+        .select(
+            "id",
+            F.transform(
+                "w", lambda g: F.xxhash64(F.transform(g, lambda x: F.xxhash64(x)))
+            ).alias("h"),
+        )
+        .collect()
+    }
+    got = {
+        r["id"]: r["h"]
+        for r in df.select("id", T.word_ngram_hashes(t, n).alias("h")).collect()
+    }
+    assert got == want
+
+    # corpus bigram log-probabilities over the same texts
+    grams = {
+        i: [" ".join(w) for w in _ref_windows(_ref_tokens(text), 2) or []]
+        for i, text in enumerate(NGRAM_TEXTS)
+    }
+    counts = Counter(g for gs in grams.values() for g in gs)
+    total = sum(counts.values())
+    want = {
+        i: (len(gs), round(sum(math.log(counts[g] / total) for g in gs) / len(gs), 6))
+        for i, gs in grams.items()
+        if gs
+    }
+    got = {
+        r["id"]: (r["n_bigrams"], r["avg_logprob"])
+        for r in dedup.corpus_bigram_logprob(df, "t", "id").collect()
+    }
+    assert got.keys() == want.keys()
+    for i, (nb, lp) in want.items():
+        assert got[i][0] == nb and got[i][1] == pytest.approx(lp, abs=1e-6), i
+
+
+def test_ngram_builders_tokenize_once(spark):
+    # A token array referenced inside a per-position lambda is evaluated
+    # again at every position, which makes a document's cost quadratic
+    # in its length; each builder binds it once, so its expression holds
+    # the tokenizer's split exactly once.
+    t = F.col("t")
+    for col in [
+        T.word_ngrams(t, 3),
+        T.word_ngram_hashes(t, 8),
+        T.duplicate_ngram_fraction(t, 2),
+        dedup.word_shingles(t, 3),
+    ]:
+        assert str(col).count("split(") == 1, str(col)
+    df = spark.createDataFrame([(1, "a b c")], "doc_id int, text string")
+    plan = (
+        dedup.corpus_bigram_logprob(df, "text", "doc_id")
+        ._jdf.queryExecution().analyzed().toString()
+    )
+    assert plan.count("split(") == plan.count("explode(") > 0, plan
 
 
 def test_word_ngram_hashes_tracks_string_grams(spark):

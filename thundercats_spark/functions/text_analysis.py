@@ -9,6 +9,8 @@ and language bucketing should never need a shuffle.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -188,17 +190,44 @@ def distinct_word_ratio(text: Column) -> Column:
     )
 
 
+def _let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row: Spark
+    re-evaluates an outer expression at every use inside a lambda."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def _windows(arr: Column, n: int, gram: Callable[[Column], Column], short: Column) -> Column:
+    """``gram`` of each length-``n`` window of the bound array ``arr``
+    (see ``_let``), or ``short`` when it has fewer than ``n`` elements.
+    Windows come from ``n`` zipped shifted slices: an inner lambda that
+    captures ``arr`` stops Spark extracting a pandas UDF applied to the
+    result on the second side of a self-join (minhash_lsh_pairs)."""
+    k = F.size(arr) - (n - 1)
+    zipped = F.arrays_zip(*[F.slice(arr, j + 1, k) for j in range(n)])
+    return F.when(F.size(arr) < n, short).otherwise(
+        F.transform(zipped, lambda w: gram(F.array(*[w[str(j)] for j in range(n)])))
+    )
+
+
+def _joined(toks: Column) -> Column:
+    return F.array_join(toks, " ")
+
+
 def word_ngrams(text: Column, n: int) -> Column:
-    """Positional word n-grams as strings (1-indexed element_at over the
-    token array; sequence bounds keep it in-range)."""
-    toks = tokens(text)
-    return F.when(F.size(toks) < n, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, (i + j).cast("int")) for j in range(n)]
-            ),
-        )
+    """Positional word n-grams as space-joined strings; empty when the
+    text has fewer than ``n`` tokens."""
+    return _let(
+        tokens(text),
+        lambda t: _windows(t, n, _joined, F.array().cast("array<string>")),
+    )
+
+
+def word_shingles(text: Column, n: int = 3) -> Column:
+    """Distinct word n-gram shingles; a text with fewer than ``n``
+    tokens is one shingle, its tokens joined."""
+    return _let(
+        tokens(text),
+        lambda t: F.array_distinct(_windows(t, n, _joined, F.array(_joined(t)))),
     )
 
 
@@ -212,13 +241,9 @@ def word_ngram_hashes(text: Column, n: int) -> Column:
     joins), never where the gram text is part of the output. Measured
     r11: 3.4x cheaper than concat_ws-string-build + string hash on the
     8-gram decontamination scan stage."""
-    toks = tokens(text)
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-    return F.when(F.size(toks) < n, F.array().cast("array<bigint>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.xxhash64(F.slice(th, i.cast("int"), n)),
-        )
+    return _let(
+        F.transform(tokens(text), lambda t: F.xxhash64(t)),
+        lambda h: _windows(h, n, F.xxhash64, F.array().cast("array<bigint>")),
     )
 
 
@@ -227,8 +252,9 @@ def duplicate_ngram_fraction(text: Column, n: int = 2) -> Column:
     earlier occurrence — the Gopher-style repetition signal. 0 for
     diverse text, →1 for looping/template text. JVM-only: dedups the
     n-gram array and compares sizes (no shuffle, no UDF)."""
-    grams = word_ngrams(text, n)
-    return F.when(F.size(grams) == 0, F.lit(0.0)).otherwise(
-        (F.size(grams) - F.size(F.array_distinct(grams))).cast("double")
-        / F.size(grams)
+    return _let(
+        word_ngrams(text, n),
+        lambda g: F.when(F.size(g) == 0, F.lit(0.0)).otherwise(
+            (F.size(g) - F.size(F.array_distinct(g))).cast("double") / F.size(g)
+        ),
     )

@@ -35,6 +35,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from thundercats_spark.functions.text_analysis import word_ngrams, word_shingles
+
 
 def _size_to_bytes(s: str) -> int:
     """Parse Spark size-conf strings ('134217728', '128m', '4mb')."""
@@ -139,35 +141,6 @@ _P = 2147483647  # 2^31 - 1
 def _perm_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     rnd = __import__("random").Random(seed)
     return [(rnd.randrange(1, _P), rnd.randrange(0, _P)) for _ in range(num_hashes)]
-
-
-# --------------------------------------------------------------------------
-# shingling
-# --------------------------------------------------------------------------
-
-
-def word_shingles(text, n: int = 3):
-    """Distinct word n-gram shingle array (Column expression)."""
-    toks = F.split(F.trim(text), r"\s+")
-    k = F.size(toks) - (n - 1)
-    return F.when(k <= 0, F.array(F.array_join(toks, " "))).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), k),
-                lambda i: F.array_join(F.slice(toks, i, n), " "),
-            )
-        )
-    )
-
-
-def char_shingles(text, n: int = 5):
-    t = F.trim(text)
-    k = F.length(t) - (n - 1)
-    return F.when(k <= 0, F.array(t)).otherwise(
-        F.array_distinct(
-            F.transform(F.sequence(F.lit(1), k), lambda i: F.substring(t, i, n))
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -556,6 +529,11 @@ def dedup_minhash(df, text_col="text", id_col="doc_id", **kw) -> DataFrame:
 SIMHASH_BITS = 60  # 4 LSH bands × 15 bits; fits a signed long safely
 
 
+def _simhash_token_hashes(text):
+    # a raw split, not text_analysis.tokens: empty text keeps one token
+    return F.transform(F.split(F.trim(text), r"\s+"), lambda t: F.xxhash64(t))
+
+
 def simhash(text, bits: int = SIMHASH_BITS):
     """SimHash of whitespace tokens: per-bit majority vote of token
     xxhash64 bits, computed as one aggregate over a counter array —
@@ -565,7 +543,7 @@ def simhash(text, bits: int = SIMHASH_BITS):
     # counter_i > 0  ⇔  2*Σ getbit(h,i) > n_tokens. Each bit is an
     # independent int fold — no per-token array allocation (the
     # zip_with formulation allocated a 60-wide array per token).
-    tok_hashes = F.transform(F.split(F.trim(text), r"\s+"), lambda t: F.xxhash64(t))
+    tok_hashes = _simhash_token_hashes(text)
     n_tok = F.size(tok_hashes)
     def bit_adder(i: int):
         return lambda acc, h: acc + F.getbit(h, F.lit(i))
@@ -746,13 +724,13 @@ def _jaccard_shingle_sets(df, text_col, id_col, n):
     the 8-gram decontamination (text_analysis.word_ngram_hashes) is
     SLOWER here (shingle-stage cpu 11.5 → 16.5 s at sf0.1) — at n=3
     one xxhash64 over a ~20-byte joined string beats per-token hashing
-    plus a per-gram hash over an array<bigint>. Kept as strings."""
+    plus a per-gram hash over an array<bigint>. But ``word_ngram_hashes``
+    then re-hashed every token at every position, so that is unsettled;
+    a switch would change the persisted hash values. Kept as strings."""
     return ensure_parallelism(df).select(
         F.col(id_col).alias("id"),
         F.array_sort(
-            F.array_distinct(
-                F.transform(word_shingles(F.col(text_col), n), lambda s: F.xxhash64(s))
-            )
+            F.array_distinct(shingle_hashes(word_shingles(F.col(text_col), n)))
         ).alias("hs"),
     )
 
@@ -1062,8 +1040,7 @@ def minhash_signature_oph(df: DataFrame, hs_col: str, num_hashes: int = 64, seed
 def simhash_fast(df: DataFrame, text_col: str, bits: int = SIMHASH_BITS):
     """df + ``sh`` column: xxhash64 tokens in the JVM, bit-majority in
     numpy. Identical values to ``simhash`` (same hashes, same rule)."""
-    tok_hashes = F.transform(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: F.xxhash64(t))
-    return df.withColumn("__th", tok_hashes).withColumn(
+    return df.withColumn("__th", _simhash_token_hashes(F.col(text_col))).withColumn(
         "sh", _simhash_np_udf(bits)(F.col("__th"))
     ).drop("__th")
 
@@ -1082,16 +1059,8 @@ def corpus_bigram_logprob(
 ) -> DataFrame:
     """→ (id_col, n_bigrams, avg_logprob) with
     P(bigram) = count(bigram) / total_bigrams over the whole corpus."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    bigrams = F.when(F.size(toks) < 2, F.array().cast("array<string>")).otherwise(
-        F.zip_with(
-            F.slice(toks, 1, F.size(toks) - 1),
-            F.slice(toks, 2, F.size(toks) - 1),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-    )
     exploded = ensure_parallelism(df).select(
-        F.col(id_col), F.explode(bigrams).alias("bg")
+        F.col(id_col), F.explode(word_ngrams(F.col(text_col), 2)).alias("bg")
     )
     counts = exploded.groupBy("bg").agg(F.count(F.lit(1)).alias("c"))
     total = counts.agg(F.sum("c").alias("t"))

@@ -280,7 +280,8 @@ def doc_containment_pairs(spark, sf_dir):
     back via a window over doc_a — no join back to a recomputed sizes
     table. Guide §2.4 (share one exchange) + §1.2 step 1 (fix the
     distributed algorithm before anything else)."""
-    from thundercats_spark.operators.dedup import ensure_parallelism, word_shingles
+    from thundercats_spark.functions.text_analysis import token_count, word_shingles
+    from thundercats_spark.operators.dedup import ensure_parallelism
 
     # r11 second pass: stage-isolated timing showed the shingle
     # explode ALONE at 6.5s of the query's 7.9s — the documents table
@@ -289,7 +290,7 @@ def doc_containment_pairs(spark, sf_dir):
     # heavy expressions; no-op on already-wide inputs.
     d = ensure_parallelism(load(spark, sf_dir, "documents")["documents"])
     sh = (
-        d.where(F.size(F.split(F.trim(F.col("text")), r"\s+")) >= 2)
+        d.where(token_count(F.col("text")) >= 2)
         .select(
             "doc_id",
             word_shingles(F.col("text"), 2).alias("shingles"),

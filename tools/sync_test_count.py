@@ -15,8 +15,9 @@ Docs opt in per line with a literal marker:
   a collection that errors or is partial fails the tool instead of
   syncing a wrong number.
 - ``<!-- bench-count -->`` + phrase ``NNN timings`` — synced from
-  ``tools/bench_detail.json``'s per-query map (the bench artifact of
-  record; a marked line with no artifact present is a loud error).
+  ``.bench/bench_detail.json``'s per-query map (written by the last
+  full ``bench.py`` run; a marked line with no artifact present is a
+  loud error).
 A marked line WITHOUT its canonical phrase is a loud error, never
 silent drift.
 """
@@ -37,7 +38,7 @@ BENCH_MARKER = "<!-- bench-count -->"
 def bench_count() -> int:
     import json
 
-    path = os.path.join(REPO, "tools", "bench_detail.json")
+    path = os.path.join(REPO, ".bench", "bench_detail.json")
     with open(path) as f:
         return len(json.load(f)["queries"])
 
