@@ -1,11 +1,24 @@
 """hierarchy_paths: pointer-doubling forest closure
 (operators/hierarchy.py). Pins exactness vs a driver-side model walk,
 the log2 iteration bound on a deep chain, and the loud contracts
-(cycles, NULL links, multi-parent children)."""
+(cycles, NULL links, multi-parent children) on both execution paths:
+the driver walk small forests take and the distributed loop above the
+edge-count gate, plus row, schema and telemetry parity between them."""
+
+import random
 
 import pytest
 
+from thundercats_spark.operators import components
 from thundercats_spark.operators.hierarchy import hierarchy_paths
+
+
+@pytest.fixture
+def path():
+    """The path a forest test expects: test forests are far below the
+    edge-count gate, so the driver walk. ``TestIterativePath`` below
+    overrides this fixture to force the distributed loop."""
+    return "driver"
 
 
 def _model(edges):
@@ -22,44 +35,54 @@ def _model(edges):
     return {n: walk(n) for n in nodes}
 
 
-def test_forest_exact_vs_model(spark):
+def test_forest_exact_vs_model(spark, path):
     # two trees + a chain, mixed fan-out
     edges = [
         (2, 1), (3, 1), (4, 2), (5, 2), (6, 4),   # tree rooted at 1
         (20, 10), (21, 20), (22, 21), (23, 22),   # chain rooted at 10
     ]
     df = spark.createDataFrame(edges, "child long, parent long")
+    stats = {}
     got = {
         r["node"]: (r["root_key"], r["depth"])
-        for r in hierarchy_paths(df, "child", "parent").collect()
+        for r in hierarchy_paths(df, "child", "parent", stats=stats).collect()
     }
     assert got == _model(edges)
+    assert stats["path"] == path
 
 
-def test_deep_chain_converges_in_log_iterations(spark):
+def test_deep_chain_converges_in_log_iterations(spark, path):
     """A 512-deep chain must converge in ceil(log2(512)) + a couple
     iterations — the pointer-doubling contract. max_iters=12 would be
     exceeded by any O(depth) formulation (512 steps)."""
     n = 512
     edges = [(i, i - 1) for i in range(1, n + 1)]
     df = spark.createDataFrame(edges, "child long, parent long")
-    out = hierarchy_paths(df, "child", "parent", max_iters=12)
+    stats = {}
+    out = hierarchy_paths(df, "child", "parent", max_iters=12, stats=stats)
     rows = {r["node"]: (r["root_key"], r["depth"]) for r in out.collect()}
     assert rows[n] == (0, n)
     assert rows[0] == (0, 0)
     assert rows[1] == (0, 1)
     assert len(rows) == n + 1
+    assert stats["path"] == path
+    assert stats["iterations"] <= 10  # ceil(log2(512)) + 1
 
 
-def test_cycle_raises_loudly(spark):
+def test_cycle_raises_loudly(spark, path):
     df = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (9, 1)], "child long, parent long"
     )
+    stats = {}
     with pytest.raises(RuntimeError, match="CYCLE"):
-        hierarchy_paths(df, "child", "parent", max_iters=8)
+        hierarchy_paths(df, "child", "parent", max_iters=8, stats=stats)
+    # the flat active trajectory names the cycle: all four nodes, every round
+    assert stats["path"] == path
+    assert stats["iterations"] == 8
+    assert stats["active_per_iteration"] == [4] * 9
 
 
-def test_null_link_raises(spark):
+def test_null_link_raises(spark, path):
     df = spark.createDataFrame(
         [(2, 1), (3, None)], "child long, parent long"
     )
@@ -67,7 +90,7 @@ def test_null_link_raises(spark):
         hierarchy_paths(df, "child", "parent")
 
 
-def test_multi_parent_raises(spark):
+def test_multi_parent_raises(spark, path):
     df = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 1)], "child long, parent long"
     )
@@ -75,20 +98,22 @@ def test_multi_parent_raises(spark):
         hierarchy_paths(df, "child", "parent")
 
 
-def test_custom_column_names_and_string_keys(spark):
+def test_custom_column_names_and_string_keys(spark, path):
     df = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("z", "a")], "kid string, boss string"
     )
+    stats = {}
     got = {
         r["node"]: (r["root_key"], r["depth"])
-        for r in hierarchy_paths(df, "kid", "boss").collect()
+        for r in hierarchy_paths(df, "kid", "boss", stats=stats).collect()
     }
     assert got == {
         "a": ("a", 0), "b": ("a", 1), "c": ("a", 2), "z": ("a", 1),
     }
+    assert stats["path"] == path
 
 
-def test_self_loop_is_a_cycle_not_a_root(spark):
+def test_self_loop_is_a_cycle_not_a_root(spark, path):
     """A self-loop edge also satisfies node == anc — the root test must
     additionally require d == 0, or a length-1 cycle converges
     'successfully' with depth 1."""
@@ -99,7 +124,7 @@ def test_self_loop_is_a_cycle_not_a_root(spark):
         hierarchy_paths(df, "child", "parent", max_iters=6)
 
 
-def test_duplicate_edge_rows_get_their_own_message(spark):
+def test_duplicate_edge_rows_get_their_own_message(spark, path):
     """Review r08: an exact-duplicate (child, parent) row is a valid
     forest with a caller-side fix (.distinct()) — it must not be
     misdiagnosed as a multi-parent DAG."""
@@ -108,6 +133,124 @@ def test_duplicate_edge_rows_get_their_own_message(spark):
     )
     with pytest.raises(ValueError, match="duplicate edge"):
         hierarchy_paths(df, "child", "parent")
+
+
+class TestIterativePath:
+    """The forest tests again, with the edge-count gate lowered below
+    any input so hierarchy_paths runs its distributed loop."""
+
+    @pytest.fixture
+    def path(self, monkeypatch):
+        monkeypatch.setattr(components, "SMALL_GRAPH_ROWS", -1)
+        return "iterative"
+
+    test_forest_exact_vs_model = staticmethod(test_forest_exact_vs_model)
+    test_deep_chain_converges_in_log_iterations = staticmethod(
+        test_deep_chain_converges_in_log_iterations
+    )
+    test_cycle_raises_loudly = staticmethod(test_cycle_raises_loudly)
+    test_null_link_raises = staticmethod(test_null_link_raises)
+    test_multi_parent_raises = staticmethod(test_multi_parent_raises)
+    test_custom_column_names_and_string_keys = staticmethod(
+        test_custom_column_names_and_string_keys
+    )
+    test_self_loop_is_a_cycle_not_a_root = staticmethod(
+        test_self_loop_is_a_cycle_not_a_root
+    )
+    test_duplicate_edge_rows_get_their_own_message = staticmethod(
+        test_duplicate_edge_rows_get_their_own_message
+    )
+
+
+def _random_forest(seed: int, n_nodes: int, max_depth: int):
+    """Seeded random forest over scattered keys: a spine of depth
+    ``max_depth`` under the first root, a few dozen more roots, and
+    every other node hung under a random node shallower than
+    ``max_depth`` — depths 0..max_depth, uneven fan-out."""
+    rng = random.Random(seed)
+    keys = rng.sample(range(10**9), n_nodes)
+    depth, edges = {}, []
+    for i, k in enumerate(keys[: max_depth + 1]):
+        depth[k] = i
+        if i:
+            edges.append((k, keys[i - 1]))
+    for k in keys[max_depth + 1 : max_depth + 40]:
+        depth[k] = 0
+    placed = list(depth)
+    for k in keys[max_depth + 40 :]:
+        p = rng.choice(placed)
+        while depth[p] >= max_depth:
+            p = rng.choice(placed)
+        depth[k] = depth[p] + 1
+        edges.append((k, p))
+        placed.append(k)
+    rng.shuffle(edges)
+    return edges
+
+
+@pytest.mark.parametrize("keys", ["long", "string"])
+def test_driver_and_iterative_paths_agree(spark, monkeypatch, keys):
+    """On a 2,400-node random forest (depths 0-12) the driver walk and
+    the distributed loop return identical rows, the identical schema
+    (names, types, nullability) and the identical iteration
+    telemetry, and both equal the plain-Python model."""
+    edges = _random_forest(61, 2400, 12)
+    if keys == "string":
+        edges = [(f"k{c}", f"k{p}") for c, p in edges]
+    df = spark.createDataFrame(edges, f"child {keys}, parent {keys}")
+
+    def run():
+        stats = {}
+        out = hierarchy_paths(df, "child", "parent", stats=stats)
+        return sorted(tuple(r) for r in out.collect()), out.schema, stats
+
+    rows_d, schema_d, stats_d = run()
+    monkeypatch.setattr(components, "SMALL_GRAPH_ROWS", -1)
+    rows_i, schema_i, stats_i = run()
+
+    assert (stats_d["path"], stats_i["path"]) == ("driver", "iterative")
+    assert rows_d == rows_i
+    assert schema_d == schema_i
+    assert [f.nullable for f in schema_d] == [True, True, False]
+    assert stats_d["iterations"] == stats_i["iterations"]
+    assert stats_d["active_per_iteration"] == stats_i["active_per_iteration"]
+    assert {n: (r, d) for n, r, d in rows_d} == _model(edges)
+    assert max(d for _, _, d in rows_d) == 12
+    assert len(rows_d) >= 2000
+
+
+def test_operator_jobs_keep_the_callers_group_and_description(spark, monkeypatch):
+    """hierarchy_paths and connected_components label their eager jobs
+    with a job description and restore the caller's afterwards; the
+    caller's job group is never replaced, so jobs still count toward
+    the caller's group."""
+    from thundercats_spark.operators.components import connected_components
+
+    sc = spark.sparkContext
+    df = spark.createDataFrame([(2, 1), (3, 2)], "child long, parent long")
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    sc.setJobGroup("caller-group", "caller description")
+    try:
+        before = set(sc.statusTracker().getJobIdsForGroup("caller-group"))
+        hierarchy_paths(df, "child", "parent")
+        monkeypatch.setattr(components, "SMALL_GRAPH_ROWS", -1)
+        hierarchy_paths(df, "child", "parent")
+        connected_components(pairs)
+        connected_components(pairs, small_graph_rows=None)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+        jobs = set(sc.statusTracker().getJobIdsForGroup("caller-group")) - before
+        store = sc._jsc.sc().statusStore()
+        labels = {store.job(j).description().getOrElse(None) for j in jobs}
+        assert "hierarchy_paths: guard" in labels
+        assert "hierarchy_paths: collect edges" in labels
+        assert "hierarchy_paths: iteration 1" in labels
+        assert "connected_components: collect edges" in labels
+        assert "connected_components: iteration 1" in labels
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
 
 
 # ---------------------------------------------------------------------------

@@ -29,6 +29,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from thundercats_spark.physical.util import job_description, local_frame
+
+# Edge-count gate of the graph operators: at or below it the edges are
+# collected and the closure runs on the driver (same exact result, none
+# of the per-iteration jobs); above it the distributed loop runs. 500k
+# edges keeps the collected list well under driver memory.
+SMALL_GRAPH_ROWS = 500_000
+
 
 def _cut_lineage(df: DataFrame, reliable: bool) -> DataFrame:
     if reliable:
@@ -41,7 +49,8 @@ def _components_driver(sym: DataFrame) -> DataFrame:
     (id, component=min id) result as the iterative path, without the
     per-iteration job overhead that dominates on small graphs.
     Deterministic (pure integer set operations)."""
-    rows = sym.collect()
+    with job_description(sym.sparkSession, "connected_components: collect edges"):
+        rows = sym.collect()
     parent: dict = {}
 
     def find(x):
@@ -68,8 +77,6 @@ def _components_driver(sym: DataFrame) -> DataFrame:
     id_type = sym.schema["a"].dataType
     from pyspark.sql.types import StructField, StructType
 
-    from thundercats_spark.physical.util import local_frame
-
     schema = StructType(
         [StructField("id", id_type, True), StructField("component", id_type, True)]
     )
@@ -88,7 +95,7 @@ def connected_components(
     max_iter: int = 20,
     checkpoint_every: int = 3,
     reliable: bool = False,
-    small_graph_rows: int | None = 500_000,
+    small_graph_rows: int | None = SMALL_GRAPH_ROWS,
     stats: dict | None = None,
 ) -> DataFrame:
     """→ (id, component) where component = min node id in the
@@ -104,24 +111,27 @@ def connected_components(
     dominates on the small dup graphs a collapsed corpus typically
     yields), above it the checkpointed pointer-halving loop runs
     distributed. ``small_graph_rows=None`` forces the distributed
-    path. The 500k default keeps the collected edge list well under
-    driver memory; the 100 TB-scale graph takes the distributed path
-    automatically. Pass a dict as ``stats`` to receive execution
-    telemetry in-place: ``path`` ('driver' | 'iterative'),
+    path. The default, ``SMALL_GRAPH_ROWS`` (500k), keeps the collected
+    edge list well under driver memory; the 100 TB-scale graph takes the
+    distributed path automatically. Pass a dict as ``stats`` to receive
+    execution telemetry in-place: ``path`` ('driver' | 'iterative'),
     ``sym_edges`` (symmetric distinct edge count), and — iterative
     path only — ``iterations`` (rounds until the no-change probe,
     inclusive; the rehearsal gate asserting O(log diameter)
     convergence of pointer-halving reads this)."""
-    sym = _cut_lineage(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct(),
-        # materialize ONCE: the edge list feeds every iteration and every
-        # convergence check — without this the upstream plan (often an
-        # expensive pair-mining job) re-executes per iteration.
-        reliable,
-    )
-    n_sym = sym.count()
+    spark = edges.sparkSession
+    with job_description(spark, "connected_components: pin edges"):
+        sym = _cut_lineage(
+            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+            .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+            .distinct(),
+            # materialize ONCE: the edge list feeds every iteration and every
+            # convergence check — without this the upstream plan (often an
+            # expensive pair-mining job) re-executes per iteration.
+            reliable,
+        )
+    with job_description(spark, "connected_components: count edges"):
+        n_sym = sym.count()
     if stats is not None:
         stats["sym_edges"] = n_sym
     if small_graph_rows is not None and n_sym <= small_graph_rows:
@@ -130,12 +140,13 @@ def connected_components(
         return _components_driver(sym)
     if stats is not None:
         stats["path"] = "iterative"
-    labels = _cut_lineage(
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id")),
-        reliable,
-    )
+    with job_description(spark, "connected_components: initial labels"):
+        labels = _cut_lineage(
+            sym.select(F.col("a").alias("id"))
+            .distinct()
+            .withColumn("component", F.col("id")),
+            reliable,
+        )
     for i in range(max_iter):
         neigh = sym.join(labels, sym.b == labels.id).select(
             F.col("a").alias("id"),
@@ -172,10 +183,13 @@ def connected_components(
         # both consume new_labels, and the iteration plan would otherwise
         # deepen geometrically. (checkpoint_every kept for API compat.)
         _ = checkpoint_every
-        new_labels = _cut_lineage(new_labels, reliable)
-        changed = (
-            new_labels.where(F.col("component") != F.col("__old")).limit(1).count()
-        )
+        with job_description(spark, f"connected_components: iteration {i + 1}"):
+            new_labels = _cut_lineage(new_labels, reliable)
+            changed = (
+                new_labels.where(F.col("component") != F.col("__old"))
+                .limit(1)
+                .count()
+            )
         labels = new_labels.select("id", "component")
         if stats is not None:
             stats["iterations"] = i + 1
@@ -194,7 +208,7 @@ def dedup_groups(
     pairs: DataFrame,
     id_col: str = "doc_id",
     reliable: bool = False,
-    small_graph_rows: int | None = 500_000,
+    small_graph_rows: int | None = SMALL_GRAPH_ROWS,
 ) -> DataFrame:
     """Exact-transitive dedup: collapse every connected component of
     near-duplicate ``pairs`` to its min-id representative. Rows not in

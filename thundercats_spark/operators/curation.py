@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from thundercats_spark.functions.text_analysis import word_ngram_hashes
+from thundercats_spark.operators.components import SMALL_GRAPH_ROWS
 
 
 def source_mix(df: DataFrame, source_col: str = "source") -> DataFrame:
@@ -288,7 +289,7 @@ def corpus_split_leakage_safe(
     weights: dict[str, float],
     key_col: str = "doc_id",
     salt: str = "split",
-    small_graph_rows: int | None = 500_000,
+    small_graph_rows: int | None = SMALL_GRAPH_ROWS,
 ) -> DataFrame:
     """Group-aware train/val/test split: any two documents connected in
     ``dup_pairs`` (near-duplicate edges ``id_a``/``id_b``, e.g. from

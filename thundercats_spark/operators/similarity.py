@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from thundercats_spark.functions.vectors import cosine as vcos
+from thundercats_spark.operators.components import SMALL_GRAPH_ROWS
 from thundercats_spark.operators.dedup import ensure_parallelism
 from thundercats_spark.physical.util import local_frame
 
@@ -1774,7 +1775,7 @@ def semantic_dedup(
     id_col: str = "vec_id",
     iters: int = 3,
     seed: int = 7,
-    small_graph_rows: int | None = 500_000,
+    small_graph_rows: int | None = SMALL_GRAPH_ROWS,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: cluster embeddings with
     the IVF coarse quantizer, mine cosine>=threshold pairs within each

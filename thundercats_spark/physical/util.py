@@ -7,6 +7,8 @@ whole reduce is one partial-agg pass (no Python, no RDD)."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -17,6 +19,22 @@ def bind(df: DataFrame, f) -> MayFail[DataFrame]:
     """``df >> f`` of the reference (Util.scala:31): lift a DataFrame
     transform into MayFail."""
     return MayFail.of(lambda: f(df))
+
+
+@contextmanager
+def job_description(spark, text: str):
+    """Label the Spark jobs started inside the block with ``text`` (the
+    description the status store and the UI show per job), then restore
+    the caller's description. Only the description changes, never the
+    job group: a caller that attributes jobs to its own spans by job
+    group keeps that attribution."""
+    sc = spark.sparkContext
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(previous)
 
 
 def local_frame(spark, rows, schema) -> DataFrame:

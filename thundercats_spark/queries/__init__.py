@@ -30,21 +30,28 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-def load(spark: SparkSession, sf_dir: str, *tables: str) -> dict[str, DataFrame]:
-    """Read driver tables. ``events.ts`` is parquet TIMESTAMP(NANOS),
-    which Spark's vectorized reader rejects — read it as nanos long
-    (legacy flag) and convert to a microsecond timestamp (``div 1000``:
-    integer division, no float rounding)."""
-    # The driver calls queries on a BARE session (not get_spark), so pin
-    # the session timezone here as well: epoch_us's NTZ->LTZ conversion
-    # must be the fixed UTC mapping or DST in the host JVM zone would
-    # bend time deltas away from the DuckDB oracle (naive ts = UTC).
+def read_raw(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """One driver table as stored, with the session pins every read
+    needs. The driver calls queries on a BARE session (not get_spark),
+    so pin the session timezone here: epoch_us's NTZ->LTZ conversion
+    must be the fixed UTC mapping or DST in the host JVM zone would
+    bend time deltas away from the DuckDB oracle (naive ts = UTC).
+    ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark's vectorized
+    reader rejects, so events is read with ts as a nanos long (legacy
+    flag); ``load`` converts it."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    if table == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+
+
+def load(spark: SparkSession, sf_dir: str, *tables: str) -> dict[str, DataFrame]:
+    """Read driver tables through ``read_raw``, converting a nanos-long
+    ``events.ts`` to a microsecond timestamp (``div 1000``: integer
+    division, no float rounding)."""
     out = {}
     for t in tables:
-        if t == "events":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
+        df = read_raw(spark, sf_dir, t)
         if t == "events":
             from pyspark.sql import functions as F
             from pyspark.sql.types import LongType

@@ -106,9 +106,12 @@ def orders_grouping_sets(spark, sf_dir):
 # parent(k) = k div 10 (keys are contiguous, so every parent exists;
 # keys 1-9 are roots — depth = digits-1). DuckDB walks it with WITH
 # RECURSIVE, O(depth) steps; the Spark side is hierarchy_paths pointer
-# doubling — ceil(log2 depth)+1 equi-join iterations with state pinned
-# at |nodes| rows, the formulation that survives a 10^6-deep chain
-# (operators/hierarchy.py has the full scale argument).
+# doubling — ceil(log2 depth)+1 rounds with state pinned at |nodes|
+# rows, the formulation that survives a 10^6-deep chain. Forests at or
+# below the operator's edge-count gate (every test scale here) run those
+# rounds on the driver over the collected edges, five Spark jobs in all;
+# larger ones run them as distributed equi-join iterations
+# (operators/hierarchy.py has the gate and the full scale argument).
 # --------------------------------------------------------------------------
 
 HIERARCHY_SQL = """

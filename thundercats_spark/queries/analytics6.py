@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from thundercats_spark.queries import load, register
+from thundercats_spark.queries import load, read_raw, register
 from thundercats_spark.queries.tpch import _dec
 
 # --------------------------------------------------------------------------
@@ -257,9 +257,10 @@ def _events_stream(spark, sf_dir):
     """events as a Structured Streaming file source. The raw parquet is
     TIMESTAMP(NANOS), which the vectorized reader rejects — the stream
     must repeat load()'s treatment: read ts as nanos-long (session flag
-    set by load) and convert to a microsecond timestamp in the plan."""
-    static = load(spark, sf_dir, "events")["events"]  # pins UTC + flag
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")  # nanosAsLong ON
+    set by read_raw, as for load) and convert to a microsecond timestamp
+    in the plan. One schema inference: the raw read's schema is the
+    stream's."""
+    raw = read_raw(spark, sf_dir, "events")  # pins UTC + nanosAsLong
     stream = spark.readStream.schema(raw.schema).parquet(
         f"{sf_dir}/events.parquet*"
     )
@@ -277,7 +278,6 @@ def _events_stream(spark, sf_dir):
         # Exercised by bench at sf0.1; pytest's sf0.001 takes the
         # nanos-long branch above.
         stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    _ = static  # schema-compat anchor; the stream carries the same cols
     return stream
 
 
