@@ -62,8 +62,7 @@ def test_dedup_minhash_survivors(docs):
 
 
 def test_simhash_deterministic_and_near(docs):
-    h = docs.select("doc_id", dedup.simhash(F.col("text")).alias("h")).collect()
-    hs = {r["doc_id"]: r["h"] for r in h}
+    hs = {r["doc_id"]: r["sh"] for r in dedup.simhash(docs, "text").collect()}
     assert hs[1] == hs[2]  # identical text → identical hash
     assert all(v >= 0 for v in hs.values())  # 60-bit, no sign wrap
 
@@ -94,23 +93,79 @@ def test_minhash_recall_vs_exact_on_documents(spark, sf_dir):
         assert recall >= 0.8, f"recall {recall} over {len(truth)} pairs"
 
 
-def test_fast_kernels_match_expression_versions(spark, sf_dir):
-    """Arrow kernels must be bit-identical to the pure-JVM expressions."""
-    import pyspark.sql.functions as F
+# Plain-Python references for the signature kernels. Spark computes the
+# xxhash64 values; only the fold under test runs here.
+def _perm_minhash_ref(hs, num_hashes=64, seed=42):
+    P = dedup._P
+    return [min((a * (h % P) + b) % P for h in hs) for a, b in dedup._perm_params(num_hashes, seed)]
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(100)
-    # simhash
-    slow = {r["doc_id"]: r["h"] for r in docs.select("doc_id", dedup.simhash(F.col("text")).alias("h")).collect()}
-    fast = {r["doc_id"]: r["sh"] for r in dedup.simhash_fast(docs.select("doc_id", "text"), "text").collect()}
-    assert slow == fast
-    # minhash
+
+def _oph_bins(hs, seed=42):
+    """(bin, value) of each shingle hash under one permutation."""
+    P = dedup._P
+    a, b = dedup._perm_params(1, seed)[0]
+    return [((a * (h % P) + b) % P % 64, (a * (h % P) + b) % P // 64) for h in hs]
+
+
+def _oph_ref(hs, k=64, seed=42):
+    P, empty = dedup._P, 2**62
+    m = [empty] * k
+    for b, v in _oph_bins(hs, seed):
+        m[b] = min(m[b], v)
+    filled = [i for i in range(k) if m[i] != empty]
+    if filled and len(filled) < k:
+        # densify: each empty bin takes the last filled bin's value,
+        # mixed with its circular distance from that bin
+        d = filled[-1]
+        m = [v if v != empty else (m[d] * 40503 + (i - d) % k * 69069 + 1) % P
+             for i, v in enumerate(m)]
+    return m
+
+
+def _simhash_ref(tok_hashes, bits=60):
+    n = len(tok_hashes)
+    return sum(1 << i for i in range(bits) if 2 * sum((h >> i) & 1 for h in tok_hashes) > n)
+
+
+LONG_TEXT = " ".join(f"w{i}" for i in range(1000))  # 998 shingles: OPH fills every bin
+SHORT_TEXT = "a b c d e f g h"  # 6 shingles: OPH leaves empty bins
+EDGE_TEXTS = ["", "single", "two words", SHORT_TEXT, LONG_TEXT, None]
+
+
+def test_signature_kernels_match_python_references(spark, sf_dir):
+    """Each signature kernel (perm MinHash, OPH, SimHash) equals its
+    plain-Python reference on 100 corpus documents plus edge texts; a
+    NULL text gets a NULL signature."""
+    corpus = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id", "text")
+        .orderBy("doc_id")
+        .limit(100)
+    )
+    edge = spark.createDataFrame(
+        [(-1 - i, t) for i, t in enumerate(EDGE_TEXTS)], "doc_id long, text string"
+    )
+    docs = corpus.unionByName(edge)
+    long_id, short_id = (-1 - EDGE_TEXTS.index(t) for t in (LONG_TEXT, SHORT_TEXT))
+
     sh = docs.select(
         F.col("doc_id").alias("id"),
         F.array_distinct(dedup.shingle_hashes(dedup.word_shingles(F.col("text"), 3))).alias("hs"),
     )
-    slow_sig = {r["id"]: list(r["s"]) for r in sh.select("id", dedup.minhash_signature(F.col("hs"), 64).alias("s")).collect()}
-    fast_sig = {r["id"]: list(r["sig"]) for r in dedup.minhash_signature_fast(sh, "hs", 64).collect()}
-    assert slow_sig == fast_sig
+    hs = {r["id"]: r["hs"] for r in sh.collect()}
+    assert len({b for b, _ in _oph_bins(hs[long_id])}) == 64
+    assert len({b for b, _ in _oph_bins(hs[short_id])}) < 64
+    for method, ref in (("perm", _perm_minhash_ref), ("oph", _oph_ref)):
+        got = {r["id"]: r["sig"] for r in dedup.minhash_signature(sh, "hs", method=method).collect()}
+        assert got == {i: None if h is None else ref(h) for i, h in hs.items()}, method
+
+    tok = docs.select(
+        "doc_id",
+        F.transform(F.split(F.trim("text"), r"\s+"), lambda t: F.xxhash64(t)).alias("th"),
+    )
+    th = {r["doc_id"]: r["th"] for r in tok.collect()}
+    got = {r["doc_id"]: r["sh"] for r in dedup.simhash(docs, "text").collect()}
+    assert got == {i: None if t is None else _simhash_ref(t) for i, t in th.items()}
 
 
 def test_dedup_keep_best_policy(spark):
@@ -199,7 +254,8 @@ def test_pair_miner_collapse_is_output_identical(spark, sf_dir):
     import pyspark.sql.functions as F
 
     dup = base.withColumn("doc_id", F.col("doc_id") + 100000)
-    corpus = base.unionByName(dup)
+    nulls = spark.createDataFrame([(200001, None), (200002, None)], base.schema)
+    corpus = base.unionByName(dup).unionByName(nulls)
 
     def pairs(df_fn, **kw):
         return {
@@ -217,6 +273,20 @@ def test_pair_miner_collapse_is_output_identical(spark, sf_dir):
     m_on = pairs(dedup.minhash_lsh_pairs, threshold=0.5, collapse_exact=True)
     m_off = pairs(dedup.minhash_lsh_pairs, threshold=0.5, collapse_exact=False)
     assert m_on == m_off
+    # a NULL text has no shingles or tokens: it pairs with nothing
+    assert not any({a, b} & {200001, 200002} for a, b, _ in on | s_on | m_on)
+
+
+def test_unknown_minhash_method_raises(docs, tmp_path):
+    """Only 'perm' and 'oph' select a kernel; anything else fails before
+    a job runs or the incremental guard records index metadata."""
+    idx = tmp_path / "idx"
+    for method in ("OPH", "minhash"):
+        with pytest.raises(ValueError, match="minhash_signature.*'perm' or 'oph'"):
+            dedup.minhash_lsh_pairs(docs, method=method)
+        with pytest.raises(ValueError, match="minhash_signature.*'perm' or 'oph'"):
+            dedup.dedup_minhash_incremental_prepare(docs, str(idx), method=method)
+    assert not idx.exists()
 
 
 def test_simhash_auto_cap_exact_on_small_corpora(spark, sf_dir):
@@ -310,10 +380,11 @@ def test_dedup_minhash_incremental_across_batches(spark, tmp_path):
     base = "the quick brown fox jumps over the lazy dog and runs far away today"
     other = "completely different text about spark queries and shuffle partitions here"
     b1 = spark.createDataFrame(
-        [(1, base), (2, other)], "doc_id long, text string"
+        [(1, base), (2, other), (3, None)], "doc_id long, text string"
     )
     out1 = dedup_minhash_incremental(b1, idx, threshold=0.5)
-    assert sorted(r["doc_id"] for r in out1.collect()) == [1, 2]
+    # a NULL text has nothing to match or index: it survives
+    assert sorted(r["doc_id"] for r in out1.collect()) == [1, 2, 3]
 
     near_base = base.replace("today", "tonight")  # J >= 0.5 of doc 1
     fresh_txt = "entirely novel document mentioning streaming watermarks and stateful session windows"

@@ -34,6 +34,9 @@ SCALAR_BNLJ_OK = {
 }
 # Arrow-kernel operators are allowed (designed) Python-boundary nodes
 PY_EVAL_OK = {
+    # the Arrow signature kernels are the only MinHash/OPH/SimHash
+    # implementations: the JVM-expression forms ran 4.3x (MinHash) and
+    # 13.4x (SimHash) slower at sf0.1 (PERF_NOTES, "One kernel per signature")
     "dedup_minhash_lsh", "dedup_minhash_oph", "dedup_simhash",
     "ann_ivf_topk",  # Arrow argmax assign kernel (ivf_assign)
     # greedy merge-by-rank segmentation is a Python kernel by design:

@@ -11,10 +11,10 @@ Four families, all shuffle-disciplined:
   one-permutation hashing, ``method='oph'``) → banded bucket keys →
   candidates are pairs sharing a bucket → exact-Jaccard verify.
   Never materializes the O(n²) pair space; bucket sizes bound the
-  candidate count. All signature math is built-in higher-order
-  functions (JVM codegen), not Python.
-- **SimHash**: 64-bit weighted-majority token hash; near-dup candidates
-  share one of four 16-bit bands; verify by Hamming distance
+  candidate count. Shingle hashing runs in the JVM; the signature math
+  is one Arrow kernel per sketch (see "Signature kernels").
+- **SimHash**: 60-bit majority-vote token hash; near-dup candidates
+  share one of four 15-bit bands; verify by Hamming distance
   (``bit_count(xor)``).
 - **n-gram Jaccard**: word n-gram inverted index → shared-shingle pairs
   → exact Jaccard from intersection counts. Exact (no hashing), used as
@@ -392,25 +392,15 @@ def shingle_hashes(shingles):
     return F.transform(shingles, lambda s: F.xxhash64(s))
 
 
-def minhash_signature(shingle_hash_col, num_hashes: int = 64, seed: int = 42):
-    """Array of ``num_hashes`` min-permutation-hash values over
-    pre-hashed shingles (see ``shingle_hashes``). One int-array pass per
-    hash fn, all inside the JVM."""
-    params = _perm_params(num_hashes, seed)
-    cols = [
-        F.array_min(
-            F.transform(
-                # reduce the 64-bit base hash mod P BEFORE the affine
-                # map: a*h must stay under 2^62 (a < 2^31, h mod P < 2^31)
-                shingle_hash_col,
-                lambda h: F.pmod(
-                    F.lit(a) * F.pmod(h, F.lit(_P)) + F.lit(b), F.lit(_P)
-                )
-            )
-        )
-        for a, b in params
-    ]
-    return F.array(*cols)
+def _shingle_sets(df, text_col, id_col, n):
+    """(id, hs): each text's distinct word n-gram shingle hashes, the
+    projection the shingle-set miners share. A NULL text has no shingles
+    and pairs with nothing, so its row is dropped here: left in, every
+    NULL would share one collapse key and pair with every other NULL."""
+    return df.where(F.col(text_col).isNotNull()).select(
+        F.col(id_col).alias("id"),
+        F.array_distinct(shingle_hashes(word_shingles(F.col(text_col), n))).alias("hs"),
+    )
 
 
 def lsh_band_keys(signature, bands: int = 16):
@@ -464,12 +454,8 @@ def minhash_lsh_pairs(
     candidate recall depends on the sketch (recall-tested). Measured on
     the 10x rehearsal corpus: ~1.8x faster end-to-end with 97% of the
     k-permutation variant's verified pairs."""
-    sh = ensure_parallelism(df).select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(
-            shingle_hashes(word_shingles(F.col(text_col), shingle_n))
-        ).alias("hs"),
-    )
+    _minhash_kernel(method)  # an unknown method fails before the collapse job
+    sh = _shingle_sets(ensure_parallelism(df), text_col, id_col, shingle_n)
     groups = None
     if collapse_exact:
         # key on the SORTED set: array_distinct preserves encounter
@@ -479,8 +465,7 @@ def minhash_lsh_pairs(
             sh.withColumn("__gfp", F.xxhash64(F.array_sort("hs"))), "__gfp"
         ))
         sh = groups.select(F.col("rep").alias("id"), "hs")
-    sig_fn = minhash_signature_oph if method == "oph" else minhash_signature_fast
-    sig = sig_fn(sh, "hs", num_hashes, seed)
+    sig = minhash_signature(sh, "hs", num_hashes, seed, method)
     buckets = sig.select(
         "id", F.explode(lsh_band_keys(F.col("sig"), bands)).alias("bucket")
     )
@@ -491,22 +476,7 @@ def minhash_lsh_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     )
     cand = _spread_candidates(cand).distinct()
-    # Verify on the hashed shingle sets — int-array intersection, and
-    # only 8-byte-per-shingle arrays shuffle (never the text).
-    sh_a = sh.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a"))
-    sh_b = sh.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b"))
-    verified = (
-        cand.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("hs_a", "hs_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter")
-            / (F.size("hs_a") + F.size("hs_b") - F.col("inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    verified = _jaccard_verify(cand, sh, sh, threshold)
     if groups is not None:
         return _expand_pairs(verified, groups, "jaccard", F.lit(1.0))
     return verified
@@ -529,34 +499,6 @@ def dedup_minhash(df, text_col="text", id_col="doc_id", **kw) -> DataFrame:
 SIMHASH_BITS = 60  # 4 LSH bands × 15 bits; fits a signed long safely
 
 
-def _simhash_token_hashes(text):
-    # a raw split, not text_analysis.tokens: empty text keeps one token
-    return F.transform(F.split(F.trim(text), r"\s+"), lambda t: F.xxhash64(t))
-
-
-def simhash(text, bits: int = SIMHASH_BITS):
-    """SimHash of whitespace tokens: per-bit majority vote of token
-    xxhash64 bits, computed as one aggregate over a counter array —
-    single expression, no shuffle. 60 bits (not 64) so the MSB-first
-    reassembly fold never overflows a signed long under ANSI mode."""
-    # hash each token ONCE; per-bit majority is then popcount-style:
-    # counter_i > 0  ⇔  2*Σ getbit(h,i) > n_tokens. Each bit is an
-    # independent int fold — no per-token array allocation (the
-    # zip_with formulation allocated a 60-wide array per token).
-    tok_hashes = _simhash_token_hashes(text)
-    n_tok = F.size(tok_hashes)
-    def bit_adder(i: int):
-        return lambda acc, h: acc + F.getbit(h, F.lit(i))
-
-    out = F.lit(0).cast("long")
-    for i in range(bits):
-        ones = F.aggregate(tok_hashes, F.lit(0).cast("long"), bit_adder(i))
-        out = out + F.when(2 * ones > n_tok, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return out
-
-
 # auto hot-band cap: keep buckets up to max(floor, factor × mean size).
 # The factor tolerates natural skew; the floor keeps small corpora exact.
 _SIMHASH_CAP_FLOOR = 64
@@ -576,9 +518,11 @@ def simhash_banded(
     rehearsal (tools/scale_check.py) measures the bucket distribution of
     the REAL mining input, not a reconstruction. ``groups`` is None when
     ``collapse_exact`` is off."""
-    h = simhash_fast(
-        ensure_parallelism(df).select(F.col(id_col).alias("id"), F.col(text_col)), text_col
-    ).select("id", "sh")
+    # a NULL text has no tokens and pairs with nothing (see _shingle_sets)
+    texts = ensure_parallelism(df).where(F.col(text_col).isNotNull())
+    h = simhash(texts.select(F.col(id_col).alias("id"), F.col(text_col)), text_col).select(
+        "id", "sh"
+    )
     groups = None
     if collapse_exact:
         groups = _materialize_collapse(
@@ -727,12 +671,8 @@ def _jaccard_shingle_sets(df, text_col, id_col, n):
     plus a per-gram hash over an array<bigint>. But ``word_ngram_hashes``
     then re-hashed every token at every position, so that is unsettled;
     a switch would change the persisted hash values. Kept as strings."""
-    return ensure_parallelism(df).select(
-        F.col(id_col).alias("id"),
-        F.array_sort(
-            F.array_distinct(shingle_hashes(word_shingles(F.col(text_col), n)))
-        ).alias("hs"),
-    )
+    sh = _shingle_sets(ensure_parallelism(df), text_col, id_col, n)
+    return sh.select("id", F.array_sort("hs").alias("hs"))
 
 
 def _spread_candidates(cand: DataFrame) -> DataFrame:
@@ -755,6 +695,26 @@ def _spread_candidates(cand: DataFrame) -> DataFrame:
     return cand.repartition(p, "id_a", "id_b")
 
 
+def _jaccard_verify(cand, sh_a, sh_b, threshold):
+    """Candidate pairs (id_a, id_b) with their exact Jaccard, kept at
+    >= ``threshold``. Verifies on the hashed (id, hs) shingle sets of
+    each side: an int-array intersection, and only 8-byte-per-shingle
+    arrays shuffle (never the text)."""
+    sa = sh_a.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a"))
+    sb = sh_b.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b"))
+    return (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("inter", F.size(F.array_intersect("hs_a", "hs_b")))
+        .withColumn(
+            "jaccard",
+            F.col("inter") / (F.size("hs_a") + F.size("hs_b") - F.col("inter")),
+        )
+        .where(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
 def _jaccard_posting(sh, threshold):
     """The prefix inverted index (id, sz, shingle) holding only the
     first |A| - ceil(t*|A|) + 1 elements per doc."""
@@ -764,12 +724,6 @@ def _jaccard_posting(sh, threshold):
         F.size("hs").alias("sz"),
         F.explode(F.slice("hs", 1, prefix_len)).alias("shingle"),
     )
-
-
-def _jaccard_prefix_posting(df, text_col, id_col, n, threshold):
-    """(sh, posting) for the PPJoin prefix scheme."""
-    sh = _jaccard_shingle_sets(df, text_col, id_col, n)
-    return sh, _jaccard_posting(sh, threshold)
 
 
 def _jaccard_mine(sh, posting, threshold):
@@ -787,20 +741,7 @@ def _jaccard_mine(sh, posting, threshold):
         )
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     )
-    cand = _spread_candidates(cand).distinct()
-    sa = sh.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a"))
-    sb = sh.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b"))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("hs_a", "hs_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.size("hs_a") + F.size("hs_b") - F.col("inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_verify(_spread_candidates(cand).distinct(), sh, sh, threshold)
 
 
 def ngram_jaccard_pairs(
@@ -921,41 +862,31 @@ def ngram_jaccard_join(
         .where(F.least("a.sz", "b.sz") >= threshold * F.greatest("a.sz", "b.sz"))
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     )
-    cand = _spread_candidates(cand).distinct()
-    sa = sha.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a"))
-    sb = shb.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b"))
-    verified = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("hs_a", "hs_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.size("hs_a") + F.size("hs_b") - F.col("inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    verified = _jaccard_verify(_spread_candidates(cand).distinct(), sha, shb, threshold)
     if collapse_exact:
         return _expand_pairs_rs(verified, ga, gb, "jaccard")
     return verified
 
 
 # --------------------------------------------------------------------------
-# Arrow-vectorized signature kernels
+# Signature kernels
 #
-# The pure-expression signatures above are correct and JVM-only, but at
-# k=64 permutations (or 60 bits) the generated code exceeds what
-# whole-stage codegen handles well and evaluation goes interpreted.
-# These kernels keep the HASHING in the JVM (xxhash64 — deterministic,
-# identical values) and move only the dense integer math (k×|shingles|
-# multiply-mod-min / bit-majority) into numpy over Arrow batches, where
-# it vectorizes. Results are bit-identical to the expression versions
-# (tested), so callers can switch freely; the *_pairs operators default
-# to the vectorized path.
+# Each sketch has one implementation: an Arrow pandas_udf. Hashing stays
+# in the JVM (xxhash64 of shingles and tokens); only the dense integer
+# math (k×|shingles| multiply-mod-min, one-permutation bin minima, the
+# 60-bit majority vote) runs in numpy over Arrow batches. Pure-expression
+# forms of the perm MinHash (k array_min(transform(...)) columns) and of
+# SimHash (a 60-bit aggregate fold) gave identical values but ran 4.3x
+# and 13.4x slower on the sf0.1 corpus (PERF_NOTES, "One kernel per
+# signature"), so they were removed. The tests pin each kernel to a
+# plain-Python reference. A NULL input row gets a NULL signature; the
+# pair miners drop NULL texts before any kernel runs.
 # --------------------------------------------------------------------------
 
 
 def _minhash_np_udf(num_hashes: int, seed: int):
+    """k-permutation MinHash: per permutation (a, b), the min of
+    (a·h + b) mod P over the shingle hashes h (each reduced mod P)."""
     params = np.array(_perm_params(num_hashes, seed), dtype=np.int64)
     a = params[:, 0][None, :]  # (1, k)
     b = params[:, 1][None, :]
@@ -964,6 +895,9 @@ def _minhash_np_udf(num_hashes: int, seed: int):
     def sig(hs: pd.Series) -> pd.Series:
         out = []
         for row in hs:
+            if row is None:
+                out.append(None)
+                continue
             # reduce 64-bit base hashes mod P first: keeps a*h < 2^62
             h = np.asarray(row, dtype=np.int64)[:, None] % _P  # (n, 1)
             m = (a * h + b) % _P  # (n, k) int64 — no overflow: < 2^62
@@ -973,36 +907,14 @@ def _minhash_np_udf(num_hashes: int, seed: int):
     return sig
 
 
-def _simhash_np_udf(bits: int):
-    shifts = np.arange(bits, dtype=np.uint64)[None, :]
-    weights = (1 << np.arange(bits, dtype=np.uint64)).astype(np.uint64)
-
-    @pandas_udf("long")
-    def sig(hs: pd.Series) -> pd.Series:
-        out = np.zeros(len(hs), dtype=np.int64)
-        for k, row in enumerate(hs):
-            h = np.asarray(row, dtype=np.int64).astype(np.uint64)[:, None]  # (n,1)
-            ones = ((h >> shifts) & 1).sum(axis=0)  # (bits,)
-            maj = (2 * ones > len(row)).astype(np.uint64)
-            out[k] = int((maj * weights).sum())
-        return pd.Series(out)
-
-    return sig
-
-
-def minhash_signature_fast(df: DataFrame, hs_col: str, num_hashes: int = 64, seed: int = 42):
-    """df + ``sig`` column from pre-hashed shingles (Arrow kernel)."""
-    return df.withColumn("sig", _minhash_np_udf(num_hashes, seed)(F.col(hs_col)))
-
-
 def _minhash_oph_np_udf(num_hashes: int, seed: int):
-    """One-permutation hashing (Li, Owen, Zhang 2012) with circular
-    densification of empty bins (Shrivastava & Li 2014): instead of k
+    """One-permutation hashing (Li, Owen, Zhang 2012) with densification
+    of empty bins (after Shrivastava & Li 2014): instead of k
     permutation passes over every shingle (O(k·n) per doc), bucket each
     shingle hash into one of k bins and min within the bin — O(n) per
-    doc, ~k× less arithmetic. Empty bins (short docs) borrow from the
-    nearest filled bin to the left (circular), mixed with the borrow
-    distance so sparse docs don't spuriously collide."""
+    doc, ~k× less arithmetic. Empty bins (short docs) all borrow from
+    the last (highest-index) filled bin, each mixed with its circular
+    distance from it so the borrowed values differ."""
     a, b = _perm_params(1, seed)[0]
     _EMPTY = np.int64(2**62)
 
@@ -1012,6 +924,9 @@ def _minhash_oph_np_udf(num_hashes: int, seed: int):
         idx = np.arange(k, dtype=np.int64)
         out = []
         for row in hs:
+            if row is None:
+                out.append(None)
+                continue
             h = np.asarray(row, dtype=np.int64) % _P  # reduce 64-bit base
             m = np.full(k, _EMPTY, dtype=np.int64)
             if len(h):
@@ -1019,9 +934,7 @@ def _minhash_oph_np_udf(num_hashes: int, seed: int):
                 np.minimum.at(m, h % k, h // k)
             empty = m == _EMPTY
             if empty.any() and not empty.all():
-                arr = np.where(~empty, idx, -1)
-                ff = np.maximum.accumulate(np.concatenate([arr, arr]))
-                donor = ff[k + idx]  # nearest filled bin at/left of i, circular
+                donor = np.flatnonzero(~empty)[-1]
                 dist = (idx - donor) % k
                 m = np.where(empty, (m[donor] * 40503 + dist * 69069 + 1) % _P, m)
             out.append(m)
@@ -1030,17 +943,60 @@ def _minhash_oph_np_udf(num_hashes: int, seed: int):
     return sig
 
 
-def minhash_signature_oph(df: DataFrame, hs_col: str, num_hashes: int = 64, seed: int = 42):
-    """df + ``sig`` via one-permutation hashing — the scale path for
-    signature computation (O(n) per doc vs O(k·n)); band/bucket/verify
-    stages are identical to the k-permutation signature."""
-    return df.withColumn("sig", _minhash_oph_np_udf(num_hashes, seed)(F.col(hs_col)))
+_MINHASH_KERNELS = {"perm": _minhash_np_udf, "oph": _minhash_oph_np_udf}
 
 
-def simhash_fast(df: DataFrame, text_col: str, bits: int = SIMHASH_BITS):
-    """df + ``sh`` column: xxhash64 tokens in the JVM, bit-majority in
-    numpy. Identical values to ``simhash`` (same hashes, same rule)."""
-    return df.withColumn("__th", _simhash_token_hashes(F.col(text_col))).withColumn(
+def _minhash_kernel(method: str):
+    """The signature kernel factory for ``method``. The miners call this
+    on entry so an unknown method fails before any Spark job runs."""
+    if method not in _MINHASH_KERNELS:
+        raise ValueError(
+            f"minhash_signature: method must be 'perm' or 'oph'; got {method!r}"
+        )
+    return _MINHASH_KERNELS[method]
+
+
+def minhash_signature(
+    df: DataFrame, hs_col: str, num_hashes: int = 64, seed: int = 42, method: str = "perm"
+) -> DataFrame:
+    """df + ``sig``: the MinHash signature of the pre-hashed shingle set
+    in ``hs_col`` (see ``shingle_hashes``). ``method='perm'`` takes k
+    permutation minima (O(k·n) per doc); ``method='oph'`` is
+    one-permutation hashing (O(n) per doc) — a different sketch with
+    the same banding and verify downstream. Any other ``method`` raises
+    ``ValueError``."""
+    kernel = _minhash_kernel(method)(num_hashes, seed)
+    return df.withColumn("sig", kernel(F.col(hs_col)))
+
+
+def _simhash_np_udf(bits: int):
+    shifts = np.arange(bits, dtype=np.uint64)[None, :]
+    weights = (1 << np.arange(bits, dtype=np.uint64)).astype(np.uint64)
+
+    @pandas_udf("long")
+    def sig(hs: pd.Series) -> pd.Series:
+        out = np.zeros(len(hs), dtype=np.int64)
+        null = hs.isna().to_numpy()
+        for k, row in enumerate(hs):
+            if null[k]:
+                continue
+            h = np.asarray(row, dtype=np.int64).astype(np.uint64)[:, None]  # (n,1)
+            ones = ((h >> shifts) & 1).sum(axis=0)  # (bits,)
+            maj = (2 * ones > len(row)).astype(np.uint64)
+            out[k] = int((maj * weights).sum())
+        return pd.Series(pd.arrays.IntegerArray(out, null))
+
+    return sig
+
+
+def simhash(df: DataFrame, text_col: str, bits: int = SIMHASH_BITS) -> DataFrame:
+    """df + ``sh``: the SimHash of ``text_col``'s whitespace tokens, the
+    per-bit majority vote of the token xxhash64 values (tokens hashed in
+    the JVM, the vote in numpy). 60 bits, so the value is never negative.
+    A raw split, not text_analysis.tokens: an empty text keeps one
+    (empty) token."""
+    tok_hashes = F.transform(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: F.xxhash64(t))
+    return df.withColumn("__th", tok_hashes).withColumn(
         "sh", _simhash_np_udf(bits)(F.col("__th"))
     ).drop("__th")
 
@@ -1268,6 +1224,7 @@ def dedup_minhash_incremental_prepare(
     the ordering contract). The materialization also means the heavy
     within-batch LSH pass runs exactly once — survivors and both index
     upserts reuse the cached frames."""
+    _minhash_kernel(method)  # an unknown method fails before the guard writes meta
     spark = new_df.sparkSession
     buckets_path = index_path.rstrip("/") + "/buckets"
     sets_path = index_path.rstrip("/") + "/sets"
@@ -1290,14 +1247,8 @@ def dedup_minhash_incremental_prepare(
         num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
         threshold=threshold, seed=seed, method=method,
     ).localCheckpoint(eager=True)
-    sh = survivors.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(
-            shingle_hashes(word_shingles(F.col(text_col), shingle_n))
-        ).alias("hs"),
-    )
-    sig_fn = minhash_signature_oph if method == "oph" else minhash_signature_fast
-    new_buckets = sig_fn(sh, "hs", num_hashes, seed).select(
+    sh = _shingle_sets(survivors, text_col, id_col, shingle_n)
+    new_buckets = minhash_signature(sh, "hs", num_hashes, seed, method).select(
         "id", F.explode(lsh_band_keys(F.col("sig"), bands)).alias("bucket")
     )
     try:
@@ -1344,9 +1295,10 @@ def dedup_minhash_incremental_prepare(
         fresh.select("id"), "id", "left_semi"
     ).localCheckpoint(eager=True)
     return IncrementalBatch(
+        # a NULL text has no shingles to index or match: it survives
         survivors=survivors.join(
             fresh.select(F.col("id").alias(id_col)), id_col, "inner"
-        ),
+        ).unionByName(survivors.where(F.col(text_col).isNull())),
         _upserts=[
             (fresh.select("id", "hs"), sets_path, ["id"]),
             (fresh_buckets, buckets_path, ["id", "bucket"]),

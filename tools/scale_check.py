@@ -151,15 +151,10 @@ def main():
     # MinHash LSH: bucket distribution of the banded signature — both the
     # raw per-row banding and the EFFECTIVE mining input (identical
     # shingle sets collapsed to reps, the default plan since r03)
-    sh = d.select(
-        F.col("doc_id").alias("id"),
-        F.array_distinct(
-            dedup.shingle_hashes(dedup.word_shingles(F.col("text"), 3))
-        ).alias("hs"),
-    )
+    sh = dedup._shingle_sets(d, "text", "doc_id", 3)
 
     def minhash_buckets(frame):
-        sig = dedup.minhash_signature_fast(frame, "hs", 64, 42)
+        sig = dedup.minhash_signature(frame, "hs", 64, 42)
         return sig.select(
             "id", F.explode(dedup.lsh_band_keys(F.col("sig"), 16)).alias("bucket")
         )
