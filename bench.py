@@ -180,7 +180,7 @@ BENCH_QUERIES = [
 # selection must therefore be STABLE BY NAME: this list pins, in order,
 # (a) every query that was inline in BENCH_r11 — so the next PERF
 # comparison sees the full common set — then (b) the rest of
-# BENCH_QUERIES in registry order as space permits. Append new names at
+# BENCH_QUERIES sorted by name as space permits. Append new names at
 # the END; never reorder or remove (reordering rotates the common set
 # again). The full 3-decimal detail always lands in BENCH_DETAIL.
 INLINE_PRIORITY = [

@@ -48,7 +48,7 @@ def main():
 
     # 1. quantized index: 4x smaller cells, partition-pruned probes
     idx = f"{work}/emb_q8_idx"
-    similarity.ann_quantized_index_build(history, idx, n_clusters=8)
+    similarity.ann_index_build(history, idx, n_clusters=8, quantize=True)
 
     # 2. incremental maintenance: one batch, touched cells only
     appended = similarity.ann_index_append(spark, late_batch, idx)
@@ -63,7 +63,7 @@ def main():
 
     # 4. serve: integer-domain cosine over the probed cells only
     qv = [float(x) for x in emb.where(F.col("vec_id") == 0).first()["embedding"]]
-    top = similarity.ann_topk_quantized_indexed(spark, idx, qv, k=5, nprobe=3)
+    top = similarity.ann_topk_indexed(spark, idx, qv, k=5, nprobe=3)
     print("top-5 neighbors:")
     top.show(truncate=False)
 

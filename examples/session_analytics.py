@@ -8,7 +8,8 @@ show (registry entries are deliberately self-contained):
      leakage-safe split; mining it twice is ~80% of both queries'
      cost. Mine once, ``localCheckpoint`` (cuts the mining lineage so
      neither consumer re-executes it), feed both — measured 1.46x at
-     sf0.1 (tools/shared_pairs_ab.py).
+     sf0.1 (PERF_NOTES.md, "r07: shared-pairs composition" and "r10:
+     shared-pairs A/B extended").
 
   2. Rank at scale without the single-sort-partition trap. The RFM
      scorecard needs three whole-table NTILEs; ``NTILE(4) OVER

@@ -14,9 +14,10 @@ consumers over one corpus — so the session-shaped pattern is:
                                    is the corpus, at what depth)
 
 All three consumers run over the SAME checkpointed pair frame; the
-mining pass executes exactly once. tools/shared_pairs_ab.py measures
-the saving (independent vs shared) at sf0.1; this example is the
-documented composition, with the invariants asserted:
+mining pass executes exactly once. PERF_NOTES.md ("r10: shared-pairs
+A/B extended") records the saving (independent vs shared) at sf0.1;
+this example is the documented composition, with the invariants
+asserted:
 
   - the composition is EQUAL to self-mined runs (pairs are pairs —
     survivors and split labels are pinned identical),

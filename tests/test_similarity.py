@@ -142,6 +142,7 @@ def test_ann_indexed_prunes_partitions_and_matches_ivf(emb, tmp_path_factory):
 
     plan = indexed._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "__cluster" in plan.split("PartitionFilters", 1)[1][:200], plan
+    _assert_single_probe_plan(plan)
     # only the probed clusters are scanned
     scanned = spark.read.parquet(idx).where(F.col("__cluster").isin(
         *_probed(cents, qv, 3))).count()
@@ -156,6 +157,13 @@ def test_ann_indexed_prunes_partitions_and_matches_ivf(emb, tmp_path_factory):
     ]
     via_index = [(r["vec_id"], r["cos"]) for r in indexed.collect()]
     assert via_index == via_ivf
+
+
+def _assert_single_probe_plan(plan):
+    """A single-query probe keeps the query as literals: one
+    TakeOrderedAndProject over the pruned scan, no join (the batch
+    prober's broadcast join measured slower for one query)."""
+    assert "TakeOrderedAndProject" in plan and "Join" not in plan, plan
 
 
 def _probed(cents, qv, nprobe):
@@ -248,6 +256,7 @@ def test_ann_lsh_indexed_prunes_partitions_and_matches_lsh(emb, tmp_path_factory
 
     plan = indexed._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "__sig" in plan.split("PartitionFilters", 1)[1][:300], plan
+    _assert_single_probe_plan(plan)
     # the probe set is a strict subset of buckets → pruned scan is smaller
     probe = similarity._lsh_probe_set(qv, 8, 7, 2)
     scanned = spark.read.parquet(idx).where(F.col("__sig").isin(*probe)).count()
@@ -322,16 +331,17 @@ def test_quantized_index_recall_size_and_pruning(emb, tmp_path_factory):
     base = tmp_path_factory.mktemp("annq8")
     fidx, qidx = str(base / "float_idx"), str(base / "q8_idx")
     cents = similarity.ann_index_build(emb, fidx, n_clusters=8)
-    assert similarity.ann_quantized_index_build(
-        emb, qidx, centroids=cents
+    assert similarity.ann_index_build(
+        emb, qidx, centroids=cents, quantize=True
     ) == cents
 
     qv = [float(x) for x in emb.where(F.col("vec_id") == 1).first()["embedding"]]
-    qres = similarity.ann_topk_quantized_indexed(spark, qidx, qv, k=10, nprobe=3)
+    qres = similarity.ann_topk_indexed(spark, qidx, qv, k=10, nprobe=3)
     plan = qres._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "__cluster" in plan.split(
         "PartitionFilters", 1
     )[1][:200], plan
+    _assert_single_probe_plan(plan)
 
     fl = [r["vec_id"] for r in
           similarity.ann_topk_indexed(spark, fidx, qv, k=10, nprobe=3).collect()]
@@ -349,21 +359,26 @@ def test_quantized_index_recall_size_and_pruning(emb, tmp_path_factory):
     assert du(qidx) < 0.6 * du(fidx), (du(qidx), du(fidx))
 
 
-def test_quantized_index_rejects_float_index_and_drifted_meta(emb, tmp_path_factory):
-    import pytest
-
+def test_ivf_prober_serves_both_codecs_and_checks_dim(emb, tmp_path_factory):
+    """One IVF prober reads the codec from the index metadata: float
+    rows rank by the float cosine, int8 rows by the integer cosine
+    (the query's own vector first either way); a wrong query dim fails
+    loudly on both."""
     spark = emb.sparkSession
     base = tmp_path_factory.mktemp("annq8meta")
     fidx, qidx = str(base / "float_idx"), str(base / "q8_idx")
-    similarity.ann_index_build(emb, fidx, n_clusters=4)
-    similarity.ann_quantized_index_build(emb, qidx, n_clusters=4)
+    cents = similarity.ann_index_build(emb, fidx, n_clusters=4)
+    similarity.ann_index_build(emb, qidx, centroids=cents, quantize=True)
     qv = [float(x) for x in emb.where(F.col("vec_id") == 1).first()["embedding"]]
-    # probing a float index with the quantized prober fails loudly
-    with pytest.raises(ValueError, match="float IVF index"):
-        similarity.ann_topk_quantized_indexed(spark, fidx, qv)
-    # wrong query dim fails loudly
-    with pytest.raises(ValueError, match="dim"):
-        similarity.ann_topk_quantized_indexed(spark, qidx, qv + [0.0])
+    fl = similarity.ann_topk_indexed(spark, fidx, qv, k=5, nprobe=4).collect()
+    qt = similarity.ann_topk_indexed(spark, qidx, qv, k=5, nprobe=4).collect()
+    exact = similarity.ann_topk_bruteforce(emb, qv, k=5).collect()
+    assert [tuple(r) for r in fl] == [tuple(r) for r in exact]
+    assert qt[0]["vec_id"] == 1 and len(qt) == 5
+    assert [r["cos"] for r in qt] != [r["cos"] for r in fl]  # int8 scores
+    for idx in (fidx, qidx):
+        with pytest.raises(ValueError, match="dim"):
+            similarity.ann_topk_indexed(spark, idx, qv + [0.0])
 
 
 def test_quantized_query_codes_match_stored_rule(spark):
@@ -394,16 +409,15 @@ def test_ann_index_append_matches_full_rebuild(emb, tmp_path_factory):
     half_b = emb.where(F.col("vec_id") % 2 == 1)
     qv = [float(x) for x in emb.where(F.col("vec_id") == 2).first()["embedding"]]
 
-    for kind, build, probe in (
-        ("float", similarity.ann_index_build,
-         lambda p: similarity.ann_topk_indexed(spark, p, qv, k=10, nprobe=3)),
-        ("q8", similarity.ann_quantized_index_build,
-         lambda p: similarity.ann_topk_quantized_indexed(
-             spark, p, qv, k=10, nprobe=3)),
-    ):
+    def probe(p):
+        return similarity.ann_topk_indexed(spark, p, qv, k=10, nprobe=3)
+
+    for kind, quantize in (("float", False), ("q8", True)):
         inc, full = str(base / f"{kind}_inc"), str(base / f"{kind}_full")
-        cents = build(half_a, inc, n_clusters=4)
-        build(emb, full, centroids=cents)
+        cents = similarity.ann_index_build(
+            half_a, inc, n_clusters=4, quantize=quantize
+        )
+        similarity.ann_index_build(emb, full, centroids=cents, quantize=quantize)
         n = similarity.ann_index_append(spark, half_b, inc)
         assert n == half_b.count()
         got = [(r["vec_id"], r["cos"]) for r in probe(inc).collect()]
@@ -501,9 +515,9 @@ def test_ann_index_stats_reports_health(emb, tmp_path_factory):
     similarity.ann_index_append(spark, extra, idx, assume_new_ids=True)
     s2 = similarity.ann_index_stats(spark, idx)
     assert s2["n_vectors"] == 2 * emb.count()
-    # quantized twin carries the flag
+    # the int8 layout carries the flag
     qidx = str(tmp_path_factory.mktemp("annstats") / "qidx")
-    similarity.ann_quantized_index_build(emb, qidx, n_clusters=4)
+    similarity.ann_index_build(emb, qidx, n_clusters=4, quantize=True)
     assert similarity.ann_index_stats(spark, qidx)["quantized"]
 
 
@@ -539,7 +553,7 @@ def test_ann_lsh_index_append_matches_full_rebuild(emb, tmp_path_factory):
     inc, full = str(base / "inc"), str(base / "full")
     similarity.ann_lsh_index_build(half_a, inc)
     similarity.ann_lsh_index_build(emb, full)
-    n = similarity.ann_lsh_index_append(spark, half_b, inc)
+    n = similarity.ann_index_append(spark, half_b, inc)
     assert n == half_b.count()
     got = [
         (r["vec_id"], r["cos"])
@@ -550,7 +564,7 @@ def test_ann_lsh_index_append_matches_full_rebuild(emb, tmp_path_factory):
         for r in similarity.ann_topk_lsh_indexed(spark, full, qv, k=10).collect()
     ]
     assert got == want
-    similarity.ann_lsh_index_append(spark, half_b, inc)  # replay
+    similarity.ann_index_append(spark, half_b, inc)  # replay
     pairs = lambda p: sorted(  # noqa: E731
         (r["vec_id"], r["__sig"]) for r in spark.read.parquet(p).collect()
     )
@@ -562,7 +576,7 @@ def test_ann_lsh_index_append_update_moves_bucket_and_validates(
 ):
     """A re-sent id whose updated vector hashes to a DIFFERENT bucket
     must not leave its stale row behind (same stale-row hunt as the IVF
-    append); layout/dim mismatches fail loudly."""
+    append); a dim mismatch fails loudly."""
     import pytest
 
     spark = emb.sparkSession
@@ -579,7 +593,7 @@ def test_ann_lsh_index_append_update_moves_bucket_and_validates(
         [(5, [-float(x) for x in row["embedding"]], int(row["label"]))],
         emb.schema,
     )
-    similarity.ann_lsh_index_append(spark, moved, idx)
+    similarity.ann_index_append(spark, moved, idx)
     after = spark.read.parquet(idx)
     assert after.groupBy("vec_id").count().where("count > 1").collect() == []
     got = after.where("vec_id = 5").collect()
@@ -588,14 +602,7 @@ def test_ann_lsh_index_append_update_moves_bucket_and_validates(
 
     bad = emb.select("vec_id", F.slice("embedding", 1, 3).alias("embedding"))
     with pytest.raises(ValueError, match="dim"):
-        similarity.ann_lsh_index_append(spark, bad, idx)
-    # cross-layout appends are rejected in both directions
-    ivf = str(base / "ivf")
-    similarity.ann_index_build(emb, ivf, n_clusters=4)
-    with pytest.raises(ValueError, match="IVF layout"):
-        similarity.ann_lsh_index_append(spark, emb, ivf)
-    with pytest.raises(ValueError, match="LSH layout"):
-        similarity.ann_index_append(spark, emb, idx)
+        similarity.ann_index_append(spark, bad, idx)
 
 
 def test_ann_batch_topk_indexed_parity_and_single_scan(emb, tmp_path_factory):
@@ -608,15 +615,12 @@ def test_ann_batch_topk_indexed_parity_and_single_scan(emb, tmp_path_factory):
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in emb.where(F.col("vec_id").isin(0, 3, 7)).collect()
     ]
-    for kind, build, probe_one in (
-        ("float", similarity.ann_index_build,
-         lambda p, v: similarity.ann_topk_indexed(spark, p, v, k=5, nprobe=2)),
-        ("q8", similarity.ann_quantized_index_build,
-         lambda p, v: similarity.ann_topk_quantized_indexed(
-             spark, p, v, k=5, nprobe=2)),
-    ):
+    def probe_one(p, v):
+        return similarity.ann_topk_indexed(spark, p, v, k=5, nprobe=2)
+
+    for kind, quantize in (("float", False), ("q8", True)):
         idx = str(base / kind)
-        build(emb, idx, n_clusters=4)
+        similarity.ann_index_build(emb, idx, n_clusters=4, quantize=quantize)
         out = similarity.ann_batch_topk_indexed(spark, idx, qs, k=5, nprobe=2)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Scan parquet") == 1, (kind, plan)
@@ -703,11 +707,11 @@ def test_maintain_ann_index_rebuilds_on_drift(spark, tmp_path_factory):
     assert not calm["degraded"] and not calm["rebuilt"] and calm["appended"] == 0
 
 
-def test_ann_index_append_auto_dispatches_by_layout(emb, tmp_path_factory):
-    """The auto appender routes on the index's own metadata: IVF paths
-    behave exactly like ann_index_append, LSH paths exactly like
-    ann_lsh_index_append, and a metadata doc naming neither layout is
-    a loud error (never a guessed fallback)."""
+def test_ann_index_append_serves_both_families(emb, tmp_path_factory):
+    """One appender reads the family from the index's own metadata: an
+    IVF index and an LSH index each take the same batch, and a metadata
+    doc naming neither family is a loud error (never a guessed
+    fallback)."""
     spark = emb.sparkSession
     base = tmp_path_factory.mktemp("annauto")
     half_a = emb.where(F.col("vec_id") % 2 == 0)
@@ -715,21 +719,21 @@ def test_ann_index_append_auto_dispatches_by_layout(emb, tmp_path_factory):
 
     ivf = str(base / "ivf")
     similarity.ann_index_build(half_a, ivf, n_clusters=4)
-    assert similarity.ann_index_append_auto(spark, half_b, ivf) == half_b.count()
+    assert similarity.ann_index_append(spark, half_b, ivf) == half_b.count()
     assert sorted(
         r["vec_id"] for r in spark.read.parquet(ivf).select("vec_id").collect()
     ) == sorted(r["vec_id"] for r in emb.select("vec_id").collect())
 
     lsh = str(base / "lsh")
     similarity.ann_lsh_index_build(half_a, lsh, n_planes=6)
-    assert similarity.ann_index_append_auto(spark, half_b, lsh) == half_b.count()
+    assert similarity.ann_index_append(spark, half_b, lsh) == half_b.count()
     assert spark.read.parquet(lsh).count() == emb.count()
 
     bogus = str(base / "bogus")
     spark.range(1).write.parquet(bogus)
     similarity._write_index_meta(spark, bogus, {"dim": 8})
     with pytest.raises(ValueError, match="neither"):
-        similarity.ann_index_append_auto(spark, half_b, bogus)
+        similarity.ann_index_append(spark, half_b, bogus)
 
 
 def test_maintain_ann_index_rejects_lsh_layout(emb, tmp_path_factory):
@@ -844,21 +848,23 @@ def test_lsh_quantized_index_recall_size_pruning_and_rejections(
     candidate set is BY CONSTRUCTION the float LSH prober's (same
     float-vector signatures), so top-10 overlap stays high with only
     quantization-error rank divergence; (c) materially smaller on
-    disk; (d) float/int8 probers reject each other's layouts."""
+    disk; (d) the one prober serves both codecs and rejects a wrong
+    query dim on either."""
     import os
 
     spark = emb.sparkSession
     base = tmp_path_factory.mktemp("lshq8")
     fidx, qidx = str(base / "float_lsh"), str(base / "q8_lsh")
     similarity.ann_lsh_index_build(emb, fidx, n_planes=8)
-    similarity.ann_lsh_quantized_index_build(emb, qidx, n_planes=8)
+    similarity.ann_lsh_index_build(emb, qidx, n_planes=8, quantize=True)
 
     qv = [float(x) for x in emb.where(F.col("vec_id") == 1).first()["embedding"]]
-    qres = similarity.ann_topk_lsh_quantized_indexed(spark, qidx, qv, k=10)
+    qres = similarity.ann_topk_lsh_indexed(spark, qidx, qv, k=10)
     plan = qres._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "__sig" in plan.split(
         "PartitionFilters", 1
     )[1][:200], plan
+    _assert_single_probe_plan(plan)
 
     fl = [r["vec_id"] for r in
           similarity.ann_topk_lsh_indexed(spark, fidx, qv, k=10).collect()]
@@ -879,37 +885,37 @@ def test_lsh_quantized_index_recall_size_pruning_and_rejections(
     # swamps the int8 saving (at corpus scale the payload dominates)
     fc, qc = str(base / "float_coarse"), str(base / "q8_coarse")
     similarity.ann_lsh_index_build(emb, fc, n_planes=4)
-    similarity.ann_lsh_quantized_index_build(emb, qc, n_planes=4)
+    similarity.ann_lsh_index_build(emb, qc, n_planes=4, quantize=True)
     assert du(qc) < 0.6 * du(fc), (du(qc), du(fc))
-    # layout crosses fail loudly in both directions
-    with pytest.raises(ValueError, match="float LSH"):
-        similarity.ann_topk_lsh_quantized_indexed(spark, fidx, qv)
-    with pytest.raises(ValueError, match="int8 LSH"):
-        similarity.ann_topk_lsh_indexed(spark, qidx, qv)
+    # both codecs go through the one prober (float rows above, int8
+    # rows in qres); a wrong query dim fails loudly on either
+    for idx in (fidx, qidx):
+        with pytest.raises(ValueError, match="dim"):
+            similarity.ann_topk_lsh_indexed(spark, idx, qv + [0.0])
 
 
 def test_lsh_quantized_append_and_batch_probe_parity(emb, tmp_path_factory):
-    """ann_lsh_index_append detects the int8 layout (quantizes the
+    """ann_index_append detects the int8 LSH layout (quantizes the
     batch, signatures from the float vectors) — append equals a full
     rebuild, replay is a no-op — and the batch prober ranks int8 rows
-    identically to the per-query quantized prober."""
+    identically to the single-query prober."""
     spark = emb.sparkSession
     base = tmp_path_factory.mktemp("lshq8app")
     inc, full = str(base / "inc"), str(base / "full")
     half_a = emb.where(F.col("vec_id") % 2 == 0)
     half_b = emb.where(F.col("vec_id") % 2 == 1)
-    similarity.ann_lsh_quantized_index_build(half_a, inc, n_planes=8)
-    similarity.ann_lsh_quantized_index_build(emb, full, n_planes=8)
-    n = similarity.ann_lsh_index_append(spark, half_b, inc)
+    similarity.ann_lsh_index_build(half_a, inc, n_planes=8, quantize=True)
+    similarity.ann_lsh_index_build(emb, full, n_planes=8, quantize=True)
+    n = similarity.ann_index_append(spark, half_b, inc)
     assert n == half_b.count()
     qv = [float(x) for x in emb.where(F.col("vec_id") == 2).first()["embedding"]]
     got = [(r["vec_id"], r["cos"]) for r in
-           similarity.ann_topk_lsh_quantized_indexed(spark, inc, qv, k=10).collect()]
+           similarity.ann_topk_lsh_indexed(spark, inc, qv, k=10).collect()]
     want = [(r["vec_id"], r["cos"]) for r in
-            similarity.ann_topk_lsh_quantized_indexed(spark, full, qv, k=10).collect()]
+            similarity.ann_topk_lsh_indexed(spark, full, qv, k=10).collect()]
     assert got == want
     # replay: idempotent
-    similarity.ann_lsh_index_append(spark, half_b, inc)
+    similarity.ann_index_append(spark, half_b, inc)
     assert sorted(r["vec_id"] for r in spark.read.parquet(inc).collect()) == \
         sorted(r["vec_id"] for r in spark.read.parquet(full).collect())
     # batch probe over the int8 LSH layout: per-query parity
@@ -922,11 +928,83 @@ def test_lsh_quantized_append_and_batch_probe_parity(emb, tmp_path_factory):
     for r in out.collect():
         grouped.setdefault(r["q_id"], []).append((r["rank"], r["vec_id"], r["cos"]))
     for qid, v in qs:
-        per = similarity.ann_topk_lsh_quantized_indexed(
-            spark, full, v, k=5
-        ).collect()
+        per = similarity.ann_topk_lsh_indexed(spark, full, v, k=5).collect()
         expect = [(i + 1, r["vec_id"], r["cos"]) for i, r in enumerate(per)]
         assert sorted(grouped[qid]) == expect, qid
+
+
+def _int8_reference(spark, path, part_col, cells, qv, k):
+    """Plain-Python int8 probe: read the index parquet, keep the probed
+    cells, quantize the query with the half-away-from-zero rule, rank by
+    integer-dot cosine rounded to 6 places, ties by (-cos, id)."""
+    scale = max(abs(x) for x in qv) / 127.0
+    qq = [int(math.copysign(math.floor(abs(x / scale) + 0.5), x)) for x in qv]
+    qnorm = math.sqrt(sum(x * x for x in qq))
+    scored = []
+    for r in spark.read.parquet(path).collect():
+        if r[part_col] not in cells:
+            continue
+        codes = list(r["q"])
+        denom = math.sqrt(sum(x * x for x in codes)) * qnorm
+        cos = 0.0 if denom == 0.0 else sum(a * b for a, b in zip(codes, qq)) / denom
+        scored.append((-round(cos, 6), r["vec_id"]))
+    return [(vid, -neg) for neg, vid in sorted(scored)[:k]]
+
+
+def test_int8_single_probers_match_python_reference(emb, tmp_path_factory):
+    """Both families' single-query probers on an int8 index return the
+    plain-Python ranking over the same probed cells (not just parity
+    with the batch prober, which shares their scoring helper)."""
+    spark = emb.sparkSession
+    base = tmp_path_factory.mktemp("q8ref")
+    ivf, lsh = str(base / "ivf"), str(base / "lsh")
+    cents = similarity.ann_index_build(emb, ivf, n_clusters=8, quantize=True)
+    similarity.ann_lsh_index_build(emb, lsh, n_planes=8, quantize=True)
+    for qid in (1, 4):
+        qv = [float(x) for x in emb.where(F.col("vec_id") == qid).first()["embedding"]]
+        cases = (
+            (similarity.ann_topk_indexed(spark, ivf, qv, k=10, nprobe=3),
+             _int8_reference(spark, ivf, "__cluster", set(_probed(cents, qv, 3)), qv, 10)),
+            (similarity.ann_topk_lsh_indexed(spark, lsh, qv, k=10),
+             _int8_reference(spark, lsh, "__sig", similarity._lsh_probe_set(qv, 8, 7, 2), qv, 10)),
+        )
+        for got_df, want in cases:
+            got = [(r["vec_id"], r["cos"]) for r in got_df.collect()]
+            assert [g[0] for g in got] == [w[0] for w in want], (qid, got, want)
+            assert all(abs(g[1] - w[1]) < 1e-9 for g, w in zip(got, want)), (qid, got, want)
+
+
+def test_probers_name_the_right_family_entry_point(emb, tmp_path_factory):
+    """Each family's single and batch prober, pointed at the other
+    family's index, raises naming the entry point that serves it; the
+    IVF prober reads the metadata even when handed centroids, so a
+    directory without metadata is never probed blind."""
+    spark = emb.sparkSession
+    base = tmp_path_factory.mktemp("annfamily")
+    ivf, lsh = str(base / "ivf"), str(base / "lsh")
+    cents = similarity.ann_index_build(emb, ivf, n_clusters=4)
+    similarity.ann_lsh_index_build(emb, lsh, n_planes=6)
+    qv = [float(x) for x in emb.where(F.col("vec_id") == 1).first()["embedding"]]
+    wrong = (
+        (lambda: similarity.ann_topk_indexed(spark, lsh, qv), "ann_topk_lsh_indexed"),
+        (lambda: similarity.ann_topk_lsh_indexed(spark, ivf, qv), "ann_topk_indexed"),
+        (lambda: similarity.ann_batch_topk_indexed(spark, lsh, [(0, qv)]),
+         "ann_batch_topk_lsh_indexed"),
+        (lambda: similarity.ann_batch_topk_lsh_indexed(spark, ivf, [(0, qv)]),
+         "ann_batch_topk_indexed"),
+    )
+    for call, right in wrong:
+        with pytest.raises(ValueError, match=rf"{right}$"):
+            call()
+    # pinned centroids must agree with the index metadata
+    with pytest.raises(ValueError, match="n_clusters"):
+        similarity.ann_topk_indexed(spark, ivf, qv, centroids=cents[:3])
+    bare = str(base / "bare")
+    emb.withColumn("__cluster", F.lit(0)).write.partitionBy("__cluster").parquet(bare)
+    with pytest.raises(ValueError, match="no metadata"):
+        similarity.ann_topk_indexed(spark, bare, qv)
+    with pytest.raises(ValueError, match="no metadata"):
+        similarity.ann_topk_indexed(spark, bare, qv, centroids=cents)
 
 
 def test_cluster_corpus_map_hand_built(spark):

@@ -1,17 +1,37 @@
 """Similarity search over embedding columns (``array<float>``).
 
+Ad-hoc search (recomputes its partitioning per call):
+
 - ``ann_topk_bruteforce``: exact top-k cosine against a literal query
   vector. One scan, no shuffle (TakeOrdered for the top-k). The
-  correctness baseline.
+  correctness baseline. ``ann_batch_topk`` is its N-query form.
 - ``ann_topk_lsh``: random-hyperplane LSH — embeddings hash to sign
   buckets; search probes the query's bucket plus 1-bit-flip neighbors
-  (multiprobe) and reranks exactly. At 100 TB the probe touches only
-  matching buckets (partition-prunable when bucketed/partitioned by
-  signature).
-- ``cosine_pairs_bruteforce``: all near-pairs ≥ threshold, exact (block
-  nested loop). Oracle for the LSH variants; quadratic by nature.
-- ``cosine_pairs_lsh``: scalable near-pair candidates via shared
-  hyperplane buckets, cosine-verified.
+  (multiprobe) and reranks exactly.
+- ``ann_topk_ivf``: IVF — probe the ``nprobe`` cells of a k-means
+  coarse quantizer (``ivf_train``/``ivf_assign``) nearest the query.
+
+Persisted indexes: one parquet directory partitioned by its cell
+column plus ``<path>_meta``, in two families and two codecs:
+
+- IVF (``__cluster`` cells, centroids at ``<path>_centroids``) built by
+  ``ann_index_build``; LSH (``__sig`` buckets) built by
+  ``ann_lsh_index_build``. ``quantize=True`` stores int8 codes
+  ``(id, q_scale, q)`` instead of the float vectors (meta
+  ``quantized=1``).
+- ``ann_topk_indexed`` / ``ann_topk_lsh_indexed`` probe one query and
+  ``ann_batch_topk_indexed`` / ``ann_batch_topk_lsh_indexed`` a batch,
+  each over a scan pruned to the probed cells at planning time;
+  ``ann_index_append`` upserts a batch into either family;
+  ``ann_index_stats`` and ``maintain_ann_index`` watch cell balance.
+  Every one of them reads the family and codec from the index's own
+  metadata (``_open_index``), so the int8 and float layouts share one
+  entry point each.
+
+Pairs and dedup: ``cosine_pairs_bruteforce`` (exact, quadratic — the
+oracle), ``cosine_pairs_lsh`` (shared hyperplane buckets,
+cosine-verified), ``cosine_pairs_clustered`` and ``semantic_dedup``
+(pairs within IVF cells).
 
 Hyperplanes are deterministic (seeded) so results reproduce.
 """
@@ -186,6 +206,117 @@ def _check_index_meta(spark, path: str, kind: str, caller: dict) -> dict:
     return meta
 
 
+def _open_index(
+    spark,
+    path: str,
+    family: str | None,
+    instead: str = "",
+    caller: dict | None = None,
+) -> tuple[dict, bool]:
+    """Decide a persisted index's layout from its own metadata — the ONE
+    place that does. The family is ``"ivf"`` when the meta has
+    ``n_clusters`` and ``"lsh"`` when it has ``n_planes``; the codec is
+    int8 when it has ``quantized=1``. ``family`` is what the entry point
+    serves (``None`` accepts either); an index of the other family is a
+    loud error that ends with ``instead``, which names the entry point
+    that serves it. ``caller`` pins hyperparameters as assertions (see
+    ``_check_index_meta``). Returns ``(meta, quantized)``, the family
+    under ``meta["layout"]``."""
+    kind = family.upper() if family else "ANN"
+    meta = _check_index_meta(spark, path, kind, caller or {})
+    if "n_clusters" in meta:
+        meta["layout"] = "ivf"
+    elif "n_planes" in meta:
+        meta["layout"] = "lsh"
+    else:
+        raise ValueError(
+            f"index at {path!r} has neither n_clusters nor n_planes in "
+            "its metadata — not a persisted ANN index layout"
+        )
+    if family is not None and meta["layout"] != family:
+        raise ValueError(
+            f"index at {path!r} is an {meta['layout'].upper()} layout, not "
+            f"an {kind} layout; {instead}"
+        )
+    return meta, int(meta.get("quantized", 0)) == 1
+
+
+def _check_query_dim(query_vec: list[float], meta: dict, path: str) -> None:
+    if len(query_vec) != int(meta["dim"]):
+        raise ValueError(
+            f"query vector has dim {len(query_vec)} but the "
+            f"{meta['layout'].upper()} index at {path!r} was built for "
+            f"dim {meta['dim']}"
+        )
+
+
+def _encode(
+    rows: DataFrame, quantized: bool, vec_col: str, id_col: str, part_col: str
+) -> DataFrame:
+    """What an index partition stores per row, given ``rows`` with the
+    cell key already computed from the FLOAT vector: every column as
+    is, or for int8 only ``(id, part_col, q_scale, q array<int>)`` —
+    ~0.4x the bytes of the float layout, with the same pruning."""
+    if not quantized:
+        return rows
+    from thundercats_spark.operators.embeddings import quantize_embeddings
+
+    return quantize_embeddings(
+        rows, vec_col=vec_col, id_col=id_col, keep_cols=(part_col,)
+    )
+
+
+def _cos_expr(
+    quantized: bool,
+    vec_col: str,
+    query_vec: list[float] | None = None,
+    round_digits: int | None = 6,
+):
+    """The cosine every persisted prober ranks by. With ``query_vec``
+    the query enters as literals (single-query plan); with ``None`` it
+    comes from the batch's joined ``__qv`` (float) or ``__qq`` /
+    ``__qnorm`` (int8) columns. int8 rows rank in the code domain
+    (``_int8_cos``), the query quantized by ``_quantize_query``."""
+    if quantized:
+        if query_vec is None:
+            cos = _int8_cos(F.col("__qq"), F.col("__qnorm"))
+        else:
+            qq, qnorm = _quantize_query(query_vec)
+            cos = _int8_cos(F.array(*[F.lit(int(x)) for x in qq]), F.lit(qnorm))
+    else:
+        qv = F.col("__qv") if query_vec is None else _lit_vec(query_vec)
+        cos = vcos(F.col(vec_col), qv)
+    return cos if round_digits is None else F.round(cos, round_digits)
+
+
+def _probe_one(
+    spark,
+    path: str,
+    part_col: str,
+    cells,
+    quantized: bool,
+    query_vec: list[float],
+    k: int,
+    vec_col: str,
+    id_col: str,
+) -> DataFrame:
+    """Single-query body of both families' probers: a scan of ONLY the
+    probed ``cells`` (the IN-list is on the partition column, so the
+    parquet source prunes at planning time — PartitionFilters in
+    explain), the query as literals, and ``orderBy().limit(k)`` →
+    TakeOrderedAndProject with no join. A batch of one through
+    ``_probe_batch`` returns the same rows but measured slower (0.39-
+    0.41 s against 0.34-0.36 s for an 8-cell IVF index over 2,000
+    vectors at sf0.1 on local[3]). → (vec_id, cos)."""
+    scanned = spark.read.parquet(path).where(F.col(part_col).isin(*sorted(cells)))
+    cos = _cos_expr(quantized, vec_col, query_vec)
+    return (
+        scanned.select(F.col(id_col), cos.alias("cos"))
+        .orderBy(F.desc("cos"), F.asc(id_col))
+        .limit(k)
+    )
+
+
 def ann_lsh_index_build(
     df: DataFrame,
     path: str,
@@ -194,6 +325,7 @@ def ann_lsh_index_build(
     n_planes: int = 8,
     seed: int = 7,
     dim: int | None = None,
+    quantize: bool = False,
 ) -> int:
     """Build the persisted hyperplane-LSH index: compute each vector's
     sign signature once and write parquet PARTITIONED BY ``__sig`` (the
@@ -203,8 +335,11 @@ def ann_lsh_index_build(
     per query. The hyperplanes are fully determined by (dim, n_planes,
     seed); those are persisted at ``<path>_meta`` and validated at probe
     time so a drifted caller fails loudly instead of probing the wrong
-    buckets. Pass ``dim`` when known to skip the discovery job (else
-    one ``first()`` reads a single vector). One distributed pass, no
+    buckets. ``quantize=True`` stores int8 codes instead of the float
+    vectors (see ``_encode``; the signature still comes from the float
+    vector, so bucketing is unaffected) and records ``quantized=1``.
+    Pass ``dim`` when known to skip the discovery job (else one
+    ``first()`` reads a single vector). One distributed pass, no
     shuffle besides the write; returns ``dim``."""
     if dim is None:
         row = df.select(F.size(vec_col).alias("d")).first()
@@ -215,12 +350,12 @@ def ann_lsh_index_build(
             )
         dim = row["d"]
     sig = hyperplane_signature(F.col(vec_col), dim, n_planes, seed)
-    df.withColumn("__sig", sig).write.mode("overwrite").partitionBy("__sig").parquet(
-        path
-    )
-    _write_index_meta(
-        df.sparkSession, path, {"dim": dim, "n_planes": n_planes, "seed": seed}
-    )
+    rows = _encode(df.withColumn("__sig", sig), quantize, vec_col, id_col, "__sig")
+    rows.write.mode("overwrite").partitionBy("__sig").parquet(path)
+    meta = {"dim": dim, "n_planes": n_planes, "seed": seed}
+    if quantize:
+        meta["quantized"] = 1
+    _write_index_meta(df.sparkSession, path, meta)
     return dim
 
 
@@ -235,123 +370,34 @@ def ann_topk_lsh_indexed(
     seed: int | None = None,
     multiprobe_bits: int = 2,
 ) -> DataFrame:
-    """Approximate top-k against a persisted LSH index (see
-    ``ann_lsh_index_build``): compute the probe-bucket set on the driver
-    (pure arithmetic on the seeded hyperplanes), then scan ONLY those
-    ``__sig=`` partitions — the IN-list lands on the partition column,
-    so the parquet source prunes at planning time (PartitionFilters in
-    explain) — and exact-rerank. The hyperplane parameters come from the
-    index's own metadata; passing ``n_planes``/``seed`` explicitly is
-    allowed only as an assertion (mismatch raises — see
-    ``_check_index_meta``). A query vector whose length differs from
-    the indexed ``dim`` also raises. The per-query cost drops from
-    O(table) signature recompute to O(probed buckets) scan."""
-    meta = _check_index_meta(
-        spark, path, "LSH", {"n_planes": n_planes, "seed": seed}
+    """Approximate top-k against a persisted LSH index, float or int8
+    (see ``ann_lsh_index_build``): compute the probe-bucket set on the
+    driver (pure arithmetic on the seeded hyperplanes, from the float
+    query), then scan ONLY those ``__sig=`` partitions and exact-rerank
+    (``_probe_one``; int8 rows rank by the integer cosine). The
+    hyperplane parameters come from the index's own metadata; passing
+    ``n_planes``/``seed`` explicitly is allowed only as an assertion
+    (mismatch raises — see ``_check_index_meta``). A query vector whose
+    length differs from the indexed ``dim`` also raises. The per-query
+    cost drops from O(table) signature recompute to O(probed buckets)
+    scan."""
+    meta, quantized = _open_index(
+        spark, path, "lsh", "probe it with ann_topk_indexed",
+        {"n_planes": n_planes, "seed": seed},
     )
-    if int(meta.get("quantized", 0)) == 1:
-        raise ValueError(
-            f"index at {path!r} is an int8 LSH index (stores codes, not "
-            "float vectors) — probe it with ann_topk_lsh_quantized_indexed"
-        )
-    if len(query_vec) != meta["dim"]:
-        raise ValueError(
-            f"query vector has dim {len(query_vec)} but the LSH index at "
-            f"{path!r} was built for dim {meta['dim']}"
-        )
+    _check_query_dim(query_vec, meta, path)
     probe = _lsh_probe_set(
         query_vec, int(meta["n_planes"]), int(meta["seed"]), multiprobe_bits
     )
-    cells = spark.read.parquet(path).where(F.col("__sig").isin(*sorted(probe)))
-    return ann_topk_bruteforce(cells, query_vec, k, vec_col, id_col).select(
-        id_col, "cos"
+    return _probe_one(
+        spark, path, "__sig", probe, quantized, query_vec, k, vec_col, id_col
     )
 
 
-def ann_lsh_quantized_index_build(
-    df: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_planes: int = 8,
-    seed: int = 7,
-    dim: int | None = None,
-) -> int:
-    """int8 twin of ``ann_lsh_index_build`` — completes the serving
-    layout matrix (float/int8 x IVF/LSH): the signature is computed on
-    the FLOAT vector (bucketing quality unaffected), then only
-    ``(id, q_scale, q array<int>)`` is stored per ``__sig`` partition —
-    the same ~0.4x bytes trade as the int8 IVF index, with the same
-    planning-time partition pruning at probe. Meta carries
-    ``quantized=1`` so the float prober/appender and this layout can't
-    be crossed silently. Probe with ``ann_topk_lsh_quantized_indexed``;
-    maintain with ``ann_lsh_index_append`` (layout auto-detected)."""
-    from thundercats_spark.operators.embeddings import quantize_embeddings
-
-    if dim is None:
-        row = df.select(F.size(vec_col).alias("d")).first()
-        if row is None:
-            raise ValueError(
-                "cannot build an LSH index from an empty frame without "
-                "an explicit dim= (nothing to discover the width from)"
-            )
-        dim = row["d"]
-    sig = hyperplane_signature(F.col(vec_col), dim, n_planes, seed)
-    quantize_embeddings(
-        df.withColumn("__sig", sig),
-        vec_col=vec_col,
-        id_col=id_col,
-        keep_cols=("__sig",),
-    ).write.mode("overwrite").partitionBy("__sig").parquet(path)
-    _write_index_meta(
-        df.sparkSession,
-        path,
-        {"dim": dim, "n_planes": n_planes, "seed": seed, "quantized": 1},
-    )
-    return dim
-
-
-def ann_topk_lsh_quantized_indexed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    multiprobe_bits: int = 2,
-    round_digits: int | None = 6,
-) -> DataFrame:
-    """Probe a persisted int8 LSH index (``ann_lsh_quantized_index_build``):
-    the probe-bucket set is the same driver-side arithmetic as the
-    float prober (signatures come from the float query vector), the
-    scan is partition-pruned to those ``__sig=`` buckets, and ranking
-    happens entirely in the quantized domain via the shared integer
-    cosine (scales cancel). → (vec_id, cos)."""
-    meta = _check_index_meta(spark, path, "quantized-LSH", {"quantized": 1})
-    if int(meta.get("quantized", 0)) != 1:
-        raise ValueError(
-            f"index at {path!r} is a float LSH index — probe it with "
-            "ann_topk_lsh_indexed, or rebuild with "
-            "ann_lsh_quantized_index_build"
-        )
-    if len(query_vec) != meta["dim"]:
-        raise ValueError(
-            f"query vector has dim {len(query_vec)} but the LSH index at "
-            f"{path!r} was built for dim {meta['dim']}"
-        )
-    probe = _lsh_probe_set(
-        query_vec, int(meta["n_planes"]), int(meta["seed"]), multiprobe_bits
-    )
-    qq, qnorm = _quantize_query(query_vec)
-    qlit = F.array(*[F.lit(int(x)) for x in qq])
-    cells = spark.read.parquet(path).where(F.col("__sig").isin(*sorted(probe)))
-    cos = _int8_cos(qlit, F.lit(qnorm))
-    if round_digits is not None:
-        cos = F.round(cos, round_digits)
-    return (
-        cells.select(F.col(id_col), cos.alias("cos"))
-        .orderBy(F.desc("cos"), F.asc(id_col))
-        .limit(k)
-    )
+def _normalize_rows(centroids: list[list[float]]) -> "np.ndarray":
+    cmat = np.array(centroids, dtype=np.float64)
+    cmat /= np.maximum(np.linalg.norm(cmat, axis=1, keepdims=True), 1e-12)
+    return cmat
 
 
 def _ivf_partial_sums(
@@ -364,8 +410,7 @@ def _ivf_partial_sums(
     dim-wide sum done as one numpy reduction instead of ``dim`` codegen
     sum expressions. No shuffle: the final combine over
     n_partitions × n_clusters tiny rows happens on the driver."""
-    cmat = np.array(centroids, dtype=np.float64)
-    cmat /= np.maximum(np.linalg.norm(cmat, axis=1, keepdims=True), 1e-12)
+    cmat = _normalize_rows(centroids)
     k, dim = cmat.shape
 
     def part(batches):
@@ -431,8 +476,7 @@ def ivf_train(
         raise ValueError(
             "ivf_train: no rows to train on (empty input frame)"
         )
-    centroids = np.array([list(r[vec_col]) for r in init], dtype=np.float64)
-    centroids /= np.maximum(np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12)
+    centroids = _normalize_rows([list(r[vec_col]) for r in init])
     if recenter == "auto":
         recenter = "expr" if centroids.shape[1] <= 256 else "arrow"
     if recenter not in ("expr", "arrow"):
@@ -485,8 +529,7 @@ def ivf_assign(
     cohesion for the map/stats reports)."""
     from pyspark.sql.functions import pandas_udf
 
-    cmat = np.array(centroids, dtype=np.float64)
-    cmat /= np.maximum(np.linalg.norm(cmat, axis=1, keepdims=True), 1e-12)
+    cmat = _normalize_rows(centroids)
 
     if not with_cos:
 
@@ -738,43 +781,36 @@ def ann_index_build(
     id_col: str = "vec_id",
     seed: int = 7,
     centroids: list[list[float]] | None = None,
+    quantize: bool = False,
 ) -> list[list[float]]:
     """Build the persisted IVF index: assign every vector to its nearest
     centroid and write parquet PARTITIONED BY ``__cluster``, plus the
     centroid matrix at ``<path>_centroids``. Queries then probe via
     ``ann_topk_indexed`` with a partition-pruned scan — only
     nprobe/n_clusters of the data is ever read, instead of recomputing
-    assignments over the full table per query. Build is one distributed
-    pass (Arrow argmax kernel, no shuffle besides the write)."""
+    assignments over the full table per query. ``quantize=True`` is the
+    SQ8 serving shape: the coarse quantizer still trains and assigns on
+    the FLOAT vectors, but each cell stores only int8 codes (see
+    ``_encode``) — the dominant cost of replicating an embedding table
+    into an index at 100 TB — and the meta records ``quantized=1``.
+    Build is one distributed pass (Arrow argmax kernel, no shuffle
+    besides the write)."""
     spark = df.sparkSession
     if centroids is None:
         centroids = ivf_train(df, n_clusters, vec_col, id_col, seed=seed)
     assigned = ivf_assign(df, centroids, vec_col)
-    assigned.write.mode("overwrite").partitionBy("__cluster").parquet(path)
-    _persist_ivf_artifacts(spark, path, centroids, seed)
-    return centroids
-
-
-def _persist_ivf_artifacts(
-    spark, path: str, centroids, seed: int, extra_meta: dict | None = None
-) -> None:
-    """The IVF index layout contract, in ONE place for every builder:
-    centroid table at ``<path>_centroids``, validated metadata at
-    ``<path>_meta`` (written LAST — it is the 'built' marker the cache
-    layer checks)."""
+    rows = _encode(assigned, quantize, vec_col, id_col, "__cluster")
+    rows.write.mode("overwrite").partitionBy("__cluster").parquet(path)
     spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cluster int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(path.rstrip("/") + "_centroids")
+    # the meta goes LAST: it is the 'built' marker the cache layer checks
     meta = {"dim": len(centroids[0]), "n_clusters": len(centroids), "seed": seed}
-    meta.update(extra_meta or {})
+    if quantize:
+        meta["quantized"] = 1
     _write_index_meta(spark, path, meta)
-
-
-def _normalize_rows(centroids: list[list[float]]) -> "np.ndarray":
-    cmat = np.array(centroids, dtype=np.float64)
-    cmat /= np.maximum(np.linalg.norm(cmat, axis=1, keepdims=True), 1e-12)
-    return cmat
+    return centroids
 
 
 def _nearest_cells_normed(
@@ -820,8 +856,8 @@ def _int8_cos(qq_col, qnorm_col):
     """Cosine between a stored code vector (column ``q``) and a query's
     int8 codes/code-norm given as Column expressions — the per-vector
     scales cancel in cosine, so this is an exact integer dot over int8
-    codes with two float ops at the end. ONE implementation shared by
-    every quantized prober (single-query IVF/LSH, batch IVF/LSH)."""
+    codes with two float ops at the end. Every int8 probe ranks by it
+    through ``_cos_expr``."""
     idot = F.aggregate(
         F.zip_with(F.col("q"), qq_col, lambda a, b: a.cast("long") * b.cast("long")),
         F.lit(0).cast("long"),
@@ -859,109 +895,31 @@ def ann_topk_indexed(
     nprobe: int = 4,
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
-    """Approximate top-k against a persisted IVF index (see
-    ``ann_index_build``): pick the ``nprobe`` centroids nearest the query
-    on the driver (tiny matrix), then scan ONLY those ``__cluster=``
-    partitions — the filter is on the partition column, so the parquet
-    source prunes at planning time (PartitionFilters in explain) — and
-    exact-rerank. Same results as ``ann_topk_ivf`` with the same
-    centroids; the scan cost drops from O(table) to O(probed cells)."""
+    """Approximate top-k against a persisted IVF index, float or int8
+    (see ``ann_index_build``): pick the ``nprobe`` centroids nearest the
+    query on the driver (tiny matrix), then scan ONLY those
+    ``__cluster=`` partitions and exact-rerank (``_probe_one``). Same
+    results as ``ann_topk_ivf`` with the same centroids; the scan cost
+    drops from O(table) to O(probed cells). An int8 index ranks by
+    cosine in the quantized domain — the per-vector scales cancel, so
+    the score is an exact integer dot over the codes with two float ops
+    at the end; ranking differs from the float index only by the
+    bounded quantization error. Passing ``centroids`` skips reading
+    them back; their count and width must match the index metadata."""
+    pinned = (
+        {"n_clusters": len(centroids), "dim": len(centroids[0])}
+        if centroids is not None
+        else None
+    )
+    meta, quantized = _open_index(
+        spark, path, "ivf", "probe it with ann_topk_lsh_indexed", pinned
+    )
+    _check_query_dim(query_vec, meta, path)
     if centroids is None:
         centroids = ann_index_centroids(spark, path)
-    if len(query_vec) != len(centroids[0]):
-        raise ValueError(
-            f"query vector has dim {len(query_vec)} but the IVF index at "
-            f"{path!r} was built for dim {len(centroids[0])}"
-        )
     probe = _nearest_cells(centroids, query_vec, nprobe)
-
-    cells = spark.read.parquet(path).where(F.col("__cluster").isin(probe))
-    return ann_topk_bruteforce(cells, query_vec, k, vec_col, id_col).select(id_col, "cos")
-
-
-def ann_quantized_index_build(
-    df: DataFrame,
-    path: str,
-    n_clusters: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 7,
-    centroids: list[list[float]] | None = None,
-) -> list[list[float]]:
-    """Build the int8-quantized persisted IVF index — the serving shape
-    the quantization kernels exist for: train the coarse quantizer on
-    the FLOAT vectors (training quality is unaffected), then store only
-    ``(id, q_scale, q array<int>)`` per cell, parquet PARTITIONED BY
-    ``__cluster`` — ~4x smaller than the float index (the dominant
-    cost of replicating an embedding table into an index at 100 TB),
-    with the same planning-time partition pruning at probe.
-
-    Same layout contract as ``ann_index_build`` (centroids table at
-    ``<path>_centroids``, validated metadata at ``<path>_meta``) plus
-    ``quantized=1`` in the meta so the float prober and this one can't
-    be crossed silently. Build is one distributed pass (Arrow argmax
-    assign + JVM quantize expressions), no shuffle besides the write."""
-    from thundercats_spark.operators.embeddings import quantize_embeddings
-
-    spark = df.sparkSession
-    if centroids is None:
-        centroids = ivf_train(df, n_clusters, vec_col, id_col, seed=seed)
-    assigned = ivf_assign(df, centroids, vec_col)
-    quantize_embeddings(
-        assigned, vec_col=vec_col, id_col=id_col, keep_cols=("__cluster",)
-    ).write.mode("overwrite").partitionBy("__cluster").parquet(path)
-    _persist_ivf_artifacts(spark, path, centroids, seed, {"quantized": 1})
-    return centroids
-
-
-def ann_topk_quantized_indexed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    nprobe: int = 4,
-    centroids: list[list[float]] | None = None,
-    round_digits: int | None = 6,
-) -> DataFrame:
-    """Approximate top-k against a persisted int8 IVF index (see
-    ``ann_quantized_index_build``): pick the ``nprobe`` nearest
-    centroids on the driver, scan ONLY those ``__cluster=`` partitions
-    (planning-time pruned), and rank by cosine computed entirely in the
-    quantized domain — the per-vector scales cancel in cosine, so the
-    score is ``sum(qa*qb) / (|qa| * |qb|)``: an exact integer dot over
-    int8 codes (JVM higher-order expressions, no Python, no shuffle)
-    with two float ops at the end. Ranking differs from the float index
-    only by the bounded quantization error (recall pinned in tests).
-    → (vec_id, cos)."""
-    meta = _check_index_meta(spark, path, "quantized-IVF", {"quantized": 1})
-    if int(meta.get("quantized", 0)) != 1:
-        raise ValueError(
-            f"index at {path!r} is a float IVF index — probe it with "
-            "ann_topk_indexed, or rebuild with ann_quantized_index_build"
-        )
-    if centroids is None:
-        centroids = ann_index_centroids(spark, path)
-    if len(query_vec) != len(centroids[0]):
-        raise ValueError(
-            f"query vector has dim {len(query_vec)} but the index at "
-            f"{path!r} was built for dim {len(centroids[0])}"
-        )
-    probe = _nearest_cells(centroids, query_vec, nprobe)
-
-    # quantize the query on the driver with the same symmetric rule as
-    # the stored codes (see _quantize_query)
-    qq, qnorm = _quantize_query(query_vec)
-    qlit = F.array(*[F.lit(int(x)) for x in qq])
-
-    cells = spark.read.parquet(path).where(F.col("__cluster").isin(probe))
-    cos = _int8_cos(qlit, F.lit(qnorm))
-    if round_digits is not None:
-        cos = F.round(cos, round_digits)
-    return (
-        cells.select(F.col(id_col), cos.alias("cos"))
-        .orderBy(F.desc("cos"), F.asc(id_col))
-        .limit(k)
+    return _probe_one(
+        spark, path, "__cluster", probe, quantized, query_vec, k, vec_col, id_col
     )
 
 
@@ -973,12 +931,18 @@ def ann_index_append(
     id_col: str = "vec_id",
     assume_new_ids: bool = False,
 ) -> int:
-    """Fold a batch of new vectors into a persisted IVF index (float or
-    int8 — detected from the index's own metadata) WITHOUT a full
-    rebuild: assign the batch against the index's frozen centroids, and
-    rewrite only the cluster partitions that change — the same
-    O(batch + touched partitions) maintenance shape as
-    ``rollup_update``/``dedup_*_incremental``. The corpus-scale vector
+    """Fold a batch of new vectors into a persisted index of either
+    family, float or int8 — all read from the index's own metadata, so
+    a caller that maintains an index it didn't build (the streaming
+    sink ``streaming.windows.stream_ann_index``) keeps working if the
+    layout is swapped under it — WITHOUT a full rebuild. The batch's
+    cell keys come from the FLOAT vectors: IVF assigns against the
+    index's frozen centroids, LSH computes the signature from the
+    meta's (dim, n_planes, seed), so appended vectors land in exactly
+    the buckets a full rebuild would use. Only the touched partitions
+    are rewritten (``_upsert_partitions``) — the same O(batch + touched
+    partitions) maintenance shape as
+    ``rollup_update``/``dedup_*_incremental``; the corpus-scale vector
     data is never rescanned.
 
     Merge is an UPSERT on ``id_col`` (a re-sent id replaces its old
@@ -986,43 +950,42 @@ def ann_index_append(
     converges to the same index, so a crash between two partition swaps
     is repaired by replaying the batch — no per-partition journal
     needed (unlike sum-like rollups, where re-merging corrupts). A
-    re-sent id whose UPDATED vector assigns to a different cluster is
-    handled: one column-pruned scan over the index's (id, __cluster)
-    pair — never the vectors — locates stale rows in other clusters,
-    and those clusters are rewritten too. ``assume_new_ids=True`` skips
-    that scan for strictly-append-only ingestion (fresh ids
-    guaranteed by the caller — e.g. monotonic ingest keys).
+    re-sent id whose UPDATED vector lands in a different cell is
+    handled: one column-pruned scan over the index's (id, cell) pair —
+    never the vectors — locates stale rows in other cells, and those
+    cells are rewritten too. ``assume_new_ids=True`` skips that scan
+    for strictly-append-only ingestion (fresh ids guaranteed by the
+    caller — e.g. monotonic ingest keys).
 
-    Centroids stay FROZEN (standard IVF practice — the coarse quantizer
-    is trained once; appending never moves cells, so old vectors never
-    need re-assigning). Under real distribution drift cell balance
-    degrades and the index should be rebuilt; compare cell-size skew
-    over time to decide. Returns the number of rows appended."""
-    meta = _check_index_meta(spark, path, "IVF", {})
-    if "n_clusters" not in meta:
-        raise ValueError(
-            f"index at {path!r} is an LSH layout (metadata has no "
-            "n_clusters); append to it with ann_lsh_index_append"
-        )
-    quantized = int(meta.get("quantized", 0)) == 1
-    centroids = ann_index_centroids(spark, path)
+    IVF centroids stay FROZEN (standard IVF practice — the coarse
+    quantizer is trained once; appending never moves cells, so old
+    vectors never need re-assigning). Under real distribution drift
+    cell balance degrades and the index should be rebuilt; compare
+    cell-size skew over time (``ann_index_stats``) to decide. Returns
+    the number of rows appended."""
+    meta, quantized = _open_index(spark, path, None)
     first = batch.select(F.size(vec_col).alias("d")).first()
     if first is None:
         return 0
     if first["d"] != int(meta["dim"]):
         raise ValueError(
-            f"batch vectors have dim {first['d']} but the index at "
-            f"{path!r} was built for dim {meta['dim']}"
+            f"batch vectors have dim {first['d']} but the "
+            f"{meta['layout'].upper()} index at {path!r} was built for "
+            f"dim {meta['dim']}"
         )
-    assigned = ivf_assign(batch, centroids, vec_col)
-    if quantized:
-        from thundercats_spark.operators.embeddings import quantize_embeddings
-
-        assigned = quantize_embeddings(
-            assigned, vec_col=vec_col, id_col=id_col, keep_cols=("__cluster",)
+    if meta["layout"] == "ivf":
+        part_col = "__cluster"
+        rows = ivf_assign(batch, ann_index_centroids(spark, path), vec_col)
+    else:
+        part_col = "__sig"
+        sig = hyperplane_signature(
+            F.col(vec_col), int(meta["dim"]), int(meta["n_planes"]),
+            int(meta["seed"]),
         )
+        rows = batch.withColumn(part_col, sig)
     return _upsert_partitions(
-        spark, assigned, path, "__cluster", id_col, assume_new_ids
+        spark, _encode(rows, quantized, vec_col, id_col, part_col), path,
+        part_col, id_col, assume_new_ids,
     )
 
 
@@ -1034,9 +997,9 @@ def _upsert_partitions(
     id_col: str,
     assume_new_ids: bool,
 ) -> int:
-    """Shared upsert-into-touched-partitions engine behind both
-    persisted-index appends (IVF ``__cluster`` and LSH ``__sig``
-    layouts): ``assigned`` is the batch with its partition key already
+    """Upsert-into-touched-partitions engine behind ``ann_index_append``
+    for both families (IVF ``__cluster`` and LSH ``__sig`` layouts):
+    ``assigned`` is the batch with its partition key already
     computed as a pure function of the vector. Merge is an UPSERT on
     ``id_col`` over ONLY the touched partitions (plus a column-pruned
     stale-row hunt unless ``assume_new_ids``); per-partition atomic
@@ -1120,98 +1083,17 @@ def _upsert_partitions(
         assigned.unpersist()
 
 
-def ann_lsh_index_append(
-    spark,
-    batch: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    assume_new_ids: bool = False,
-) -> int:
-    """Fold a batch of new vectors into a persisted LSH index (float
-    or int8 — detected from the index's own metadata; see
-    ``ann_lsh_index_build`` / ``ann_lsh_quantized_index_build``)
-    WITHOUT a full rebuild — the ``__sig``
-    twin of ``ann_index_append``, and structurally SIMPLER: the
-    signature is a pure function of (vector, n_planes, seed), all read
-    from the index's own metadata, so there is no centroid-freeze
-    question at all — appended vectors hash into exactly the buckets a
-    full rebuild would put them in. Upsert on ``id_col`` into only the
-    touched ``__sig=`` partitions (plus the column-pruned stale-row
-    hunt for re-sent ids whose updated vector lands in a different
-    bucket; ``assume_new_ids=True`` skips it for append-only ingest).
-    Replay-idempotent. Returns the number of rows appended."""
-    meta = _check_index_meta(spark, path, "LSH", {})
-    if "n_planes" not in meta:
-        raise ValueError(
-            f"index at {path!r} is an IVF layout (metadata has no "
-            "n_planes); append to it with ann_index_append"
-        )
-    first = batch.select(F.size(vec_col).alias("d")).first()
-    if first is None:
-        return 0
-    if first["d"] != int(meta["dim"]):
-        raise ValueError(
-            f"batch vectors have dim {first['d']} but the LSH index at "
-            f"{path!r} was built for dim {meta['dim']}"
-        )
-    sig = hyperplane_signature(
-        F.col(vec_col), int(meta["dim"]), int(meta["n_planes"]), int(meta["seed"])
-    )
-    assigned = batch.withColumn("__sig", sig)
-    if int(meta.get("quantized", 0)) == 1:
-        # int8 layout: signature from the float vector (same as build),
-        # then store only the codes
-        from thundercats_spark.operators.embeddings import quantize_embeddings
-
-        assigned = quantize_embeddings(
-            assigned, vec_col=vec_col, id_col=id_col, keep_cols=("__sig",)
-        )
-    return _upsert_partitions(spark, assigned, path, "__sig", id_col, assume_new_ids)
-
-
-def ann_index_append_auto(
-    spark,
-    batch: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    assume_new_ids: bool = False,
-) -> int:
-    """Layout-dispatching append: read the index's own metadata and
-    route to ``ann_index_append`` (IVF float/int8, ``n_clusters``) or
-    ``ann_lsh_index_append`` (``n_planes``). The single entry point for
-    callers that maintain an index they didn't build — notably the
-    streaming sink (``streaming.windows.stream_ann_index``), which must
-    keep working if the serving team swaps the index layout under it."""
-    meta = _check_index_meta(spark, path, "ANN", {})
-    if "n_clusters" in meta:
-        fn = ann_index_append
-    elif "n_planes" in meta:
-        fn = ann_lsh_index_append
-    else:
-        raise ValueError(
-            f"index at {path!r} has neither n_clusters nor n_planes in "
-            "its metadata — not a persisted layout the appenders "
-            "understand"
-        )
-    return fn(
-        spark, batch, path, vec_col=vec_col, id_col=id_col,
-        assume_new_ids=assume_new_ids,
-    )
-
-
 def ann_index_stats(spark, path: str, max_cells: int = 4096) -> dict:
     """Index health report — the rebuild-cadence signal the append
-    docstrings point at: per-cell row counts from a column-pruned scan
+    docstring points at: per-cell row counts from a column-pruned scan
     (only the partition column is read; vectors never load), balance
     ratios, and the index's own metadata. Supports BOTH persisted
     layouts, detected from the metadata: IVF (``__cluster`` partitions,
     cell universe = ``n_clusters``) and LSH (``__sig`` partitions, cell
     universe = ``2^n_planes`` — LSH buckets are naturally sparse, so
     ``empty_cells`` is informational there, not a drift signal; watch
-    ``skew_ratio`` instead). An index maintained by the append
-    operators under distribution drift shows its skew here
+    ``skew_ratio`` instead). An index maintained by
+    ``ann_index_append`` under distribution drift shows its skew here
     (``max_cell / mean_cell`` growing); rebuild when probes slow down
     or the ratio drifts far from the build-time value. ``layout`` in
     the report says which family the index is.
@@ -1224,18 +1106,12 @@ def ann_index_stats(spark, path: str, max_cells: int = 4096) -> dict:
     ``max_cells`` HEAVIEST cells and ``cells_complete`` is False (the
     hot tail is what rebuild decisions look at; IVF layouts are
     bounded by n_clusters and stay complete)."""
-    meta = _check_index_meta(spark, path, "ANN", {})
-    if "n_clusters" in meta:
-        layout, part_col = "ivf", "__cluster"
-        universe = int(meta["n_clusters"])
-    elif "n_planes" in meta:
-        layout, part_col = "lsh", "__sig"
-        universe = 2 ** int(meta["n_planes"])
+    meta, quantized = _open_index(spark, path, None)
+    layout = meta["layout"]
+    if layout == "ivf":
+        part_col, universe = "__cluster", int(meta["n_clusters"])
     else:
-        raise ValueError(
-            f"index at {path!r} has neither n_clusters nor n_planes in "
-            "its metadata — not a layout ann_index_stats understands"
-        )
+        part_col, universe = "__sig", 2 ** int(meta["n_planes"])
     per_cell = (
         spark.read.parquet(path)
         .groupBy(part_col)
@@ -1281,7 +1157,7 @@ def ann_index_stats(spark, path: str, max_cells: int = 4096) -> dict:
         "mean_cell": round(mean, 2),
         "skew_ratio": round(mx / mean, 3) if n_cells and mean else 0.0,
         "dim": int(meta["dim"]),
-        "quantized": bool(int(meta.get("quantized", 0))),
+        "quantized": quantized,
         "cells": dict(counts),
         "cells_complete": complete,
     }
@@ -1301,27 +1177,20 @@ def _parse_query_batch(
     ``(qlist, qid_type)``."""
     from pyspark.sql.types import LongType, StringType
 
+    qid_type = None
     if isinstance(queries, DataFrame):
         qid_type = queries.schema[q_id_col].dataType
-        rows = queries.select(q_id_col, vec_col).limit(max_queries + 1).collect()
-        if len(rows) > max_queries:
-            raise ValueError(
-                f"query batch exceeds max_queries={max_queries}; shard "
-                "the batch or raise the bound explicitly (the batch is "
-                "driver-resident and broadcast)"
-            )
-        qlist = [(r[q_id_col], [float(x) for x in r[vec_col]]) for r in rows]
-    else:
-        qlist = [(qid, [float(x) for x in v]) for qid, v in queries]
-        if len(qlist) > max_queries:
-            raise ValueError(
-                f"query batch of {len(qlist)} exceeds "
-                f"max_queries={max_queries}; shard the batch"
-            )
+        queries = queries.select(q_id_col, vec_col).limit(max_queries + 1).collect()
+    qlist = [(qid, [float(x) for x in v]) for qid, v in queries]
+    if len(qlist) > max_queries:
+        raise ValueError(
+            f"query batch exceeds max_queries={max_queries}; shard the "
+            "batch or raise the bound explicitly (the batch is "
+            "driver-resident and broadcast)"
+        )
+    if qid_type is None:
         qid_type = (
-            LongType()
-            if qlist and isinstance(qlist[0][0], int)
-            else StringType()
+            LongType() if qlist and isinstance(qlist[0][0], int) else StringType()
         )
     seen_ids = set()
     for qid, v in qlist:
@@ -1340,6 +1209,79 @@ def _parse_query_batch(
     return qlist, qid_type
 
 
+def _probe_batch(
+    spark,
+    path: str,
+    meta: dict,
+    quantized: bool,
+    queries,
+    part_col: str,
+    part_type,
+    probe_cells,
+    k: int,
+    vec_col: str,
+    id_col: str,
+    q_id_col: str,
+    round_digits: int | None,
+    max_queries: int,
+) -> DataFrame:
+    """Batch body of both families' batch probers. ``probe_cells(v)``
+    gives one query's cells with the same driver-side arithmetic as the
+    single-query prober; the (q_id, cell, query payload) rows become a
+    broadcast table, the UNION of all cells drives ONE planning-time
+    partition-pruned scan, the scanned rows join the queries on
+    ``part_col`` (each stored row meets only the queries probing its
+    cell — never a nested loop), and a per-query window keeps the top k
+    — result rows identical to the single-query prober's (parity
+    test-pinned). ``part_type`` is the cell column's Spark type."""
+    from pyspark.sql import Window
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        IntegerType,
+        StructField,
+        StructType,
+    )
+
+    qlist, qid_type = _parse_query_batch(
+        queries, vec_col, q_id_col, max_queries, int(meta["dim"]), path
+    )
+    qrows, cells = [], set()
+    for qid, v in qlist:
+        probe = probe_cells(v)
+        cells.update(probe)
+        payload = _quantize_query(v) if quantized else (v,)
+        qrows.extend((qid, int(c), *payload) for c in probe)
+    payload_fields = (
+        [
+            StructField("__qq", ArrayType(IntegerType()), False),
+            StructField("__qnorm", DoubleType(), False),
+        ]
+        if quantized
+        else [StructField("__qv", ArrayType(DoubleType()), False)]
+    )
+    q_schema = StructType(
+        [
+            StructField(q_id_col, qid_type, False),
+            StructField(part_col, part_type, False),
+            *payload_fields,
+        ]
+    )
+    # driver-built query batch: Arrow LocalTableScan, not a pickled
+    # RDD re-executed (with Python workers) by every consuming stage
+    q_df = local_frame(spark, qrows, q_schema)
+
+    pred = F.col(part_col).isin(sorted(cells)) if cells else F.lit(False)
+    scanned = spark.read.parquet(path).where(pred)  # ONE pruned scan
+    joined = scanned.join(F.broadcast(q_df), part_col)
+    cos = _cos_expr(quantized, vec_col, None, round_digits)
+    scored = joined.select(F.col(q_id_col), F.col(id_col), cos.alias("cos"))
+    w = Window.partitionBy(q_id_col).orderBy(F.desc("cos"), F.asc(id_col))
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
+
+
 def ann_batch_topk_indexed(
     spark,
     path: str,
@@ -1354,91 +1296,28 @@ def ann_batch_topk_indexed(
 ) -> DataFrame:
     """Serving-throughput probe: N query vectors against a persisted
     IVF index (float OR int8 — detected from the index metadata) in ONE
-    job. Per-query probe cells come from the same driver-side
-    ``_nearest_cells`` the single-query probers use; their UNION drives
-    ONE planning-time partition-pruned scan, the (q_id, cell) pairs
-    broadcast-hash-join the scanned rows on the partition column (each
-    data row meets only the queries probing its cell — never a nested
-    loop), and a per-query window keeps the top k. Result rows are
-    identical to calling ``ann_topk_indexed`` /
-    ``ann_topk_quantized_indexed`` once per query (parity test-pinned);
-    the scan cost is amortized across the whole batch instead of paid
-    per query. → (q_id, vec_id, cos, rank).
+    job (``_probe_batch``). Per-query probe cells come from the same
+    ``_nearest_cells_normed`` as ``ann_topk_indexed``, over the
+    centroid matrix normalized once; result rows are identical to
+    calling ``ann_topk_indexed`` once per query, while the scan cost is
+    amortized across the whole batch instead of paid per query.
+    → (q_id, vec_id, cos, rank).
 
     ``queries`` is a list of ``(q_id, vector)`` tuples or a small
     DataFrame with (``q_id_col``, ``vec_col``); either way the batch is
     driver-resident (it becomes probe literals + a broadcast table), so
     batches above ``max_queries`` are rejected loudly — shard the query
     set and run several calls, or use the exact ``ann_batch_topk``."""
-    from pyspark.sql import Window
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import IntegerType
 
-    meta = _check_index_meta(spark, path, "IVF", {})
-    if "n_clusters" not in meta:
-        raise ValueError(
-            f"index at {path!r} is an LSH layout; batch-probe it with "
-            "ann_batch_topk_lsh_indexed"
-        )
-    quantized = int(meta.get("quantized", 0)) == 1
-    qlist, qid_type = _parse_query_batch(
-        queries, vec_col, q_id_col, max_queries, int(meta["dim"]), path
+    meta, quantized = _open_index(
+        spark, path, "ivf", "batch-probe it with ann_batch_topk_lsh_indexed"
     )
-    centroids = ann_index_centroids(spark, path)
-
-    # driver-side: per-query probe cells (identical to the per-query
-    # probers, over the once-normalized centroid matrix) pre-exploded
-    # into (q_id, cell, query payload) rows
-    cmat = _normalize_rows(centroids)
-    qrows, cells = [], set()
-    for qid, v in qlist:
-        probe = _nearest_cells_normed(cmat, v, nprobe)
-        cells.update(probe)
-        if quantized:
-            qq, qnorm = _quantize_query(v)
-            payload = (qq, qnorm)
-        else:
-            payload = (v,)
-        qrows.extend((qid, int(c), *payload) for c in probe)
-    payload_fields = (
-        [
-            StructField("__qq", ArrayType(IntegerType()), False),
-            StructField("__qnorm", DoubleType(), False),
-        ]
-        if quantized
-        else [StructField("__qv", ArrayType(DoubleType()), False)]
-    )
-    q_schema = StructType(
-        [
-            StructField(q_id_col, qid_type, False),
-            StructField("__cluster", IntegerType(), False),
-            *payload_fields,
-        ]
-    )
-    # driver-built query batch: Arrow LocalTableScan, not a pickled
-    # RDD re-executed (with Python workers) by every consuming stage
-    q_df = local_frame(spark, qrows, q_schema)
-
-    pred = (
-        F.col("__cluster").isin(sorted(cells)) if cells else F.lit(False)
-    )
-    scanned = spark.read.parquet(path).where(pred)  # ONE pruned scan
-    joined = scanned.join(F.broadcast(q_df), "__cluster")
-    if quantized:
-        cos = _int8_cos(F.col("__qq"), F.col("__qnorm"))
-    else:
-        cos = vcos(F.col(vec_col), F.col("__qv"))
-    if round_digits is not None:
-        cos = F.round(cos, round_digits)
-    scored = joined.select(F.col(q_id_col), F.col(id_col), cos.alias("cos"))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cos"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
+    cmat = _normalize_rows(ann_index_centroids(spark, path))
+    return _probe_batch(
+        spark, path, meta, quantized, queries, "__cluster", IntegerType(),
+        lambda v: _nearest_cells_normed(cmat, v, nprobe),
+        k, vec_col, id_col, q_id_col, round_digits, max_queries,
     )
 
 
@@ -1455,89 +1334,30 @@ def ann_batch_topk_lsh_indexed(
     max_queries: int = 100_000,
 ) -> DataFrame:
     """LSH twin of ``ann_batch_topk_indexed``: N query vectors against
-    a persisted ``__sig``-partitioned index (float OR int8 — detected
-    from the index metadata; int8 rows rank via the shared integer
-    cosine) in ONE job. Per-query probe
-    buckets come from the same ``_lsh_probe_set`` arithmetic as
-    ``ann_topk_lsh_indexed`` (hyperplanes derived once for the batch —
-    they are a pure function of (dim, n_planes, seed) from the index's
-    own metadata); the UNION of all probe signatures drives ONE
-    planning-time partition-pruned scan, the (q_id, __sig, query
-    vector) rows broadcast-hash-join the scanned rows on the partition
-    column (a stored row meets only the queries probing its bucket),
-    and a per-query window keeps the top k — result rows identical to
-    the per-query prober (parity test-pinned).
+    a persisted ``__sig``-partitioned index (float OR int8) in ONE job.
+    Per-query probe buckets come from the same arithmetic as
+    ``ann_topk_lsh_indexed`` (``_probe_set_from_planes``), with the
+    hyperplanes derived once for the batch — they are a pure function
+    of (dim, n_planes, seed) from the index's own metadata. Result rows
+    are identical to the per-query prober's.
     → (q_id, vec_id, cos, rank).
 
-    Batch limits and validation are shared with the IVF prober
-    (``_parse_query_batch``): driver-resident batch, loud rejection of
-    oversize batches, dim mismatches, and duplicate q_ids."""
-    from pyspark.sql import Window
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    Batch limits and validation are the IVF prober's: driver-resident
+    batch, loud rejection of oversize batches, dim mismatches, and
+    duplicate q_ids."""
+    from pyspark.sql.types import LongType
 
-    meta = _check_index_meta(spark, path, "LSH", {})
-    if "n_planes" not in meta:
-        raise ValueError(
-            f"index at {path!r} is an IVF layout; batch-probe it with "
-            "ann_batch_topk_indexed"
-        )
-    quantized = int(meta.get("quantized", 0)) == 1
-    dim = int(meta["dim"])
-    qlist, qid_type = _parse_query_batch(
-        queries, vec_col, q_id_col, max_queries, dim, path
+    meta, quantized = _open_index(
+        spark, path, "lsh", "batch-probe it with ann_batch_topk_indexed"
     )
-    planes = _hyperplanes(dim, int(meta["n_planes"]), int(meta["seed"]))
-
-    qrows, cells = [], set()
-    for qid, v in qlist:
-        probe = _probe_set_from_planes(planes, v, multiprobe_bits)
-        cells.update(probe)
-        if quantized:
-            qq, qnorm = _quantize_query(v)
-            payload = (qq, qnorm)
-        else:
-            payload = (v,)
-        qrows.extend((qid, int(s), *payload) for s in probe)
-    payload_fields = (
-        [
-            StructField("__qq", ArrayType(IntegerType()), False),
-            StructField("__qnorm", DoubleType(), False),
-        ]
-        if quantized
-        else [StructField("__qv", ArrayType(DoubleType()), False)]
+    planes = _hyperplanes(
+        int(meta["dim"]), int(meta["n_planes"]), int(meta["seed"])
     )
-    q_schema = StructType(
-        [
-            StructField(q_id_col, qid_type, False),
-            # long, not int: a signature is an n_planes-bit value
-            StructField("__sig", LongType(), False),
-            *payload_fields,
-        ]
-    )
-    # driver-built query batch: Arrow LocalTableScan, not a pickled
-    # RDD re-executed (with Python workers) by every consuming stage
-    q_df = local_frame(spark, qrows, q_schema)
-
-    pred = F.col("__sig").isin(sorted(cells)) if cells else F.lit(False)
-    scanned = spark.read.parquet(path).where(pred)  # ONE pruned scan
-    joined = scanned.join(F.broadcast(q_df), "__sig")
-    if quantized:
-        cos = _int8_cos(F.col("__qq"), F.col("__qnorm"))
-    else:
-        cos = vcos(F.col(vec_col), F.col("__qv"))
-    if round_digits is not None:
-        cos = F.round(cos, round_digits)
-    scored = joined.select(F.col(q_id_col), F.col(id_col), cos.alias("cos"))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cos"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
+    # long, not int: a signature is an n_planes-bit value
+    return _probe_batch(
+        spark, path, meta, quantized, queries, "__sig", LongType(),
+        lambda v: _probe_set_from_planes(planes, v, multiprobe_bits),
+        k, vec_col, id_col, q_id_col, round_digits, max_queries,
     )
 
 
@@ -1563,27 +1383,26 @@ def maintain_ann_index(
     vectors, so a rebuild needs the source table — the int8 index
     stores only codes). With ``source=None`` the report still flags
     ``degraded`` but no rebuild runs (wire the corpus in for the
-    automated path). The rebuild overwrites the index in place —
-    single-maintenance-writer assumption, same as the append path.
+    automated path). The rebuild overwrites the index in place, in the
+    same codec — single-maintenance-writer assumption, same as the
+    append path.
 
     IVF layouts only: an LSH index has no centroids to retrain (its
     buckets are a fixed function of the hyperplanes) and its empty-cell
     fraction is naturally high, so the drift thresholds here would
     flag every healthy LSH index and a "rebuild" would overwrite it
     with an IVF layout — rejected loudly instead; maintain LSH indexes
-    with ``ann_lsh_index_append`` + the ``skew_ratio`` from
+    with ``ann_index_append`` + the ``skew_ratio`` from
     ``ann_index_stats``.
 
     Returns ``{"appended", "stats", "degraded", "rebuilt"}`` plus
     ``"stats_after"`` when a rebuild ran."""
-    meta = _check_index_meta(spark, path, "IVF", {})
-    if "n_clusters" not in meta:
-        raise ValueError(
-            f"index at {path!r} is not an IVF layout; "
-            "maintain_ann_index retrains centroids, which LSH has "
-            "none of — append with ann_lsh_index_append and watch "
-            "ann_index_stats skew_ratio instead"
-        )
+    _open_index(
+        spark, path, "ivf",
+        "maintain_ann_index retrains centroids, which LSH has none of — "
+        "append with ann_index_append and watch ann_index_stats "
+        "skew_ratio instead",
+    )
     appended = 0
     if batch is not None:
         appended = ann_index_append(
@@ -1601,15 +1420,9 @@ def maintain_ann_index(
         "rebuilt": False,
     }
     if degraded and source is not None:
-        build = (
-            ann_quantized_index_build if stats["quantized"] else ann_index_build
-        )
-        cents = ivf_train(
-            source, universe, vec_col, id_col, seed=seed
-        )
-        build(
+        ann_index_build(
             source, path, n_clusters=universe, vec_col=vec_col,
-            id_col=id_col, seed=seed, centroids=cents,
+            id_col=id_col, seed=seed, quantize=stats["quantized"],
         )
         report["rebuilt"] = True
         report["stats_after"] = ann_index_stats(spark, path)

@@ -384,18 +384,18 @@ def ann_ivf_quantized_q(spark, sf_dir):
     if not built:
         _publish_index(
             idx,
-            lambda d: similarity.ann_quantized_index_build(
-                e.where(F.col("vec_id") != 0), d, n_clusters=8
+            lambda d: similarity.ann_index_build(
+                e.where(F.col("vec_id") != 0), d, n_clusters=8, quantize=True
             ),
         )
-    return similarity.ann_topk_quantized_indexed(spark, idx, qv, k=10, nprobe=3)
+    return similarity.ann_topk_indexed(spark, idx, qv, k=10, nprobe=3)
 
 
 # --------------------------------------------------------------------------
 # Batch probe against the persisted int8 index — the serving-throughput
 # shape: N query vectors amortize ONE partition-pruned scan (union of
 # their probe cells), per-query exact rerank. Rows-only: approximate by
-# design; per-query parity with ann_topk_quantized_indexed and the
+# design; per-query parity with ann_topk_indexed and the
 # single-pruned-scan plan are pytest-pinned (tests/test_similarity.py).
 # --------------------------------------------------------------------------
 
@@ -417,8 +417,8 @@ def ann_batch_indexed_q(spark, sf_dir):
     if not built:
         _publish_index(
             idx,
-            lambda d: similarity.ann_quantized_index_build(
-                e.where(F.col("vec_id") != 0), d, n_clusters=8
+            lambda d: similarity.ann_index_build(
+                e.where(F.col("vec_id") != 0), d, n_clusters=8, quantize=True
             ),
         )
     out = similarity.ann_batch_topk_indexed(spark, idx, qs, k=5, nprobe=3)
@@ -612,8 +612,8 @@ def ann_lsh_quantized_q(spark, sf_dir):
     IVF/LSH layout matrix: build the quantized __sig-partitioned index
     once per sf_dir, probe partition-pruned, rank by the shared
     integer-domain cosine. Rows-only: approximate by design; recall
-    vs the float LSH index, plan pruning, and cross-layout rejection
-    are pytest-pinned (tests/test_similarity.py)."""
+    vs the float LSH index, a plain-Python reference and plan pruning are
+    pytest-pinned (tests/test_similarity.py)."""
     from thundercats_spark.operators import similarity
     from thundercats_spark.queries.llm_ops import (
         _cached_index_dir,
@@ -629,11 +629,11 @@ def ann_lsh_quantized_q(spark, sf_dir):
     if not built:
         _publish_index(
             idx,
-            lambda d: similarity.ann_lsh_quantized_index_build(
-                e.where(F.col("vec_id") != 0), d
+            lambda d: similarity.ann_lsh_index_build(
+                e.where(F.col("vec_id") != 0), d, quantize=True
             ),
         )
-    return similarity.ann_topk_lsh_quantized_indexed(spark, idx, qv, k=10)
+    return similarity.ann_topk_lsh_indexed(spark, idx, qv, k=10)
 
 
 # --------------------------------------------------------------------------

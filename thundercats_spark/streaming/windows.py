@@ -689,11 +689,11 @@ def stream_ann_index(
     checkpoint: str | None = None,
 ):
     """Keep a persisted ANN index fresh from a stream of embeddings:
-    each micro-batch folds into the index via the layout-dispatching
-    ``ann_index_append_auto`` (IVF float/int8 or LSH — detected from
-    the index's own metadata), so the serving index trails ingestion by
-    one micro-batch instead of one rebuild cycle. The batch twin of the
-    serving story in ``examples/serving_artifacts.py``.
+    each micro-batch folds into the index via ``ann_index_append``
+    (IVF or LSH, float or int8 — read from the index's own metadata),
+    so the serving index trails ingestion by one micro-batch instead of
+    one rebuild cycle. The batch twin of the serving story in
+    ``examples/serving_artifacts.py``.
 
     Replay safety: the append is an UPSERT on ``id_col`` — re-running a
     redelivered micro-batch converges to the identical index (no
@@ -708,10 +708,10 @@ def stream_ann_index(
     corpus-scale index is never rescanned; set ``assume_new_ids=True``
     for append-only ingest keys to also skip the column-pruned
     stale-row scan. Returns the started StreamingQuery."""
-    from thundercats_spark.operators.similarity import ann_index_append_auto
+    from thundercats_spark.operators.similarity import ann_index_append
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        ann_index_append_auto(
+        ann_index_append(
             batch.sparkSession,
             batch.dropDuplicates([id_col, vec_col]),
             index_path,

@@ -462,7 +462,7 @@ def main():
     cents = similarity.ann_index_build(emb_x, f_dir, n_clusters=16)
     f_build = round(time.time() - t0, 3)
     t0 = time.time()
-    similarity.ann_quantized_index_build(emb_x, q_dir, centroids=cents)
+    similarity.ann_index_build(emb_x, q_dir, centroids=cents, quantize=True)
     q_build = round(time.time() - t0, 3)
 
     def du(path):
@@ -476,7 +476,7 @@ def main():
     similarity.ann_topk_indexed(spark, f_dir, qv, k=10, nprobe=4).collect()
     f_probe = round(time.time() - t0, 3)
     t0 = time.time()
-    similarity.ann_topk_quantized_indexed(spark, q_dir, qv, k=10, nprobe=4).collect()
+    similarity.ann_topk_indexed(spark, q_dir, qv, k=10, nprobe=4).collect()
     q_probe = round(time.time() - t0, 3)
     out["ivf_quantized_index"] = {
         "n_vectors": emb.count() * replicas,
@@ -514,9 +514,7 @@ def main():
     ]
     t0 = time.time()
     for _qid, v in qvecs:
-        similarity.ann_topk_quantized_indexed(
-            spark, q_dir, v, k=10, nprobe=4
-        ).collect()
+        similarity.ann_topk_indexed(spark, q_dir, v, k=10, nprobe=4).collect()
     loop_secs = round(time.time() - t0, 3)
     t0 = time.time()
     similarity.ann_batch_topk_indexed(
@@ -532,14 +530,14 @@ def main():
         "speedup": round(loop_secs / max(batch_secs, 1e-9), 2),
     }
 
-    # round-6: LSH persisted-index append — the __sig twin of the IVF
-    # append; cost must track the batch, not the index.
+    # round-6: LSH persisted-index append (the same ann_index_append
+    # as the IVF block); cost must track the batch, not the index.
     lsh_dir = tempfile.mkdtemp(prefix="scale_lsh_app_")
     t0 = time.time()
     similarity.ann_lsh_index_build(hist, lsh_dir)
     lsh_build = round(time.time() - t0, 3)
     t0 = time.time()
-    n_lsh = similarity.ann_lsh_index_append(spark, batch, lsh_dir)
+    n_lsh = similarity.ann_index_append(spark, batch, lsh_dir)
     out["ann_lsh_index_append"] = {
         "index_rows_before": emb.count() * (replicas - 1),
         "batch_rows": n_lsh,
